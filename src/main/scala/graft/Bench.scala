@@ -17,27 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // 84 distinct queries in one session hold far more than 100 generated
-      // classes; the default static codegen cache would recompile across
-      // queries (round-4 finding — see etl.Pipeline and PERFORMANCE.md)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // sub-humongous Tungsten pages for G1 (see etl.Pipeline: 16m is
-      // ≥ half a G1 region at any heap ≤ 64 GiB and lands in old gen)
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.hadoop.io.file.buffer.size", "1048576")
-      // the r16 driver-side listing threshold for manifest-named file
-      // lists moved into the engine (SnapshotTable.ensureDriverListing,
-      // VERDICT r16 #1), so Verify / sbt test / library consumers get
-      // it too; SPARK_GRAFT_LIST_THRESHOLD still tunes it
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench", cpus, "32")
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()

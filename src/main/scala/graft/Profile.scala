@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Single-query wall-clock decomposition for the optimization rounds:
   * runs each named query once through the noop sink (the Bench timing
@@ -18,21 +17,7 @@ object Profile {
     val Array(sfDir, qlist) = args.take(2)
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.buffer.pageSize", "2m")
-      .config("spark.hadoop.io.file.buffer.size", "1048576")
-      // driver-side listing for manifest-named lists now lives in the
-      // engine (SnapshotTable.ensureDriverListing, VERDICT r16 #1) so
-      // Verify and library consumers get it too
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-profile", cpus, "32")
 
     final case class JobRec(id: Int, desc: String, start: Long,
       var end: Long = 0L, var tasks: Int = 0, var taskMs: Long = 0L,

@@ -18,10 +18,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Each builder first ensures the custom-function catalog on the
+    * session it is given, which may be one the engine did not build. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ EventQueries.queries ++ TextQueries.queries ++
+    (CoreQueries.queries ++ EventQueries.queries ++ TextQueries.queries ++
       DedupQueries.queries ++ SimilarityQueries.queries ++
-      MultimodalQueries.queries ++ FunctionQueries.queries
+      MultimodalQueries.queries ++ FunctionQueries.queries)
+      .map { case (name, build) =>
+        name -> { (s: SparkSession, sfDir: String) =>
+          graft.plans.GraftExtensions.ensure(s)
+          build(s, sfDir)
+        }
+      }
 
   def oracleSql: Map[String, String] =
     CoreQueries.oracleSql ++ EventQueries.oracleSql ++ TextQueries.oracleSql ++

@@ -59,9 +59,9 @@ object Typed {
 
 /** SQL facade: register the testdata tables as temp views so users can
   * drive the whole engine through spark.sql — the reference's Power BI
-  * users think in declarative queries, not the DataFrame DSL. Custom
-  * functions (cosine_sim, dot_product, topk_by_score, xxhash64_seed)
-  * are registered into the same session, so SQL reaches them too.
+  * users think in declarative queries, not the DataFrame DSL. The whole
+  * custom-function catalog ([[graft.plans.GraftExtensions.catalog]]) is
+  * ensured on the same session, so SQL reaches every function too.
   */
 object SqlCatalog {
   val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -72,7 +72,6 @@ object SqlCatalog {
       case "events" => Tables.events(spark, sfDir).createOrReplaceTempView("events")
       case t => Tables.table(spark, sfDir, t).createOrReplaceTempView(t)
     }
-    functions.VectorFunctions.register(spark)
-    functions.TopKAggregate.register(spark)
+    graft.plans.GraftExtensions.ensure(spark)
   }
 }

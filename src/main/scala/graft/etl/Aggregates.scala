@@ -48,7 +48,10 @@ object Aggregates {
         sum("total_sales").as("total_sales"),
         sum("total_freight").as("total_freight"))
       .withColumn("avg_order_value", col("total_sales") / col("order_count"))
-      .withColumn("freight_percentage", col("total_freight") / col("total_sales") * 100.0)
+      // a month whose item prices sum to 0 has no freight share: NULL,
+      // not the ANSI DIVIDE_BY_ZERO error (SURVEY §7.4 H5)
+      .withColumn("freight_percentage",
+        try_divide(col("total_freight"), col("total_sales")) * 100.0)
 
     // sales_by_category (ref :292-313): fact ⋈ dim_product (J5, broadcast),
     // group on the english name when present (dynamic column choice :303).

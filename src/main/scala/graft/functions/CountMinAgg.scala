@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -146,21 +145,4 @@ case class CmsEstimate(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(sketch = newChildren(0), item = newChildren(1))
   override def prettyName: String = "cms_estimate"
-}
-
-object CountMinAgg {
-  /** Register count_min_agg(key, depth, width) and
-    * cms_estimate(sketch, key, depth, width); shape args must be
-    * foldable literals and must match between build and probe. */
-  def register(spark: SparkSession): Unit = {
-    def lit(e: Expression): Int = e.eval(null).asInstanceOf[Number].intValue()
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_agg", exprs =>
-        CountMinAgg(exprs(0), lit(exprs(1)), lit(exprs(2))).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate", exprs =>
-        CmsEstimate(exprs(0), exprs(1), lit(exprs(2)), lit(exprs(3))),
-      "built-in")
-  }
 }

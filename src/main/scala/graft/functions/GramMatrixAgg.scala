@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -88,16 +87,4 @@ case class GramMatrixAgg(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
   override def prettyName: String = "gram_matrix_agg"
-}
-
-object GramMatrixAgg {
-  /** Register gram_matrix_agg(qvec, dim) — dim must be a foldable literal;
-    * qvec is array<long> (quantize floats first: exactness is the point). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_matrix_agg", exprs =>
-        GramMatrixAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
 }

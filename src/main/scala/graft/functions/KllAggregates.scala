@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -139,26 +138,4 @@ case class KllQuantile(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "kll_quantile"
-}
-
-object KllAggregates {
-  /** Register kll_sketch_agg(value, k) / kll_merge_agg(sketch, k) /
-    * kll_quantile(sketch, rank); k must be a foldable literal. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_sketch_agg", exprs =>
-        KllSketchAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_merge_agg", exprs =>
-        KllMergeAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantile", exprs => KllQuantile(exprs(0), exprs(1)),
-      "built-in")
-  }
 }

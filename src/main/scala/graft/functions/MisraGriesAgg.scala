@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -126,16 +125,4 @@ case class MisraGriesAgg(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
   override def prettyName: String = "misra_gries_agg"
-}
-
-object MisraGriesAgg {
-  /** Register misra_gries_agg(key, k) → map<long, long>; probe with
-    * element_at(summary, key) (NULL ⇒ estimate 0). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries_agg", exprs =>
-        MisraGriesAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
 }

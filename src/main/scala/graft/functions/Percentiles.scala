@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * 3-group fact table funnels the whole corpus into 3 in-memory
   * buffers. Above `spark.graft.stats.exactPercentileLimit` input rows
   * (default 10M) every consumer switches to the mergeable KLL sketch
-  * ([[KllAggregates]], k=800 ⇒ ~0.4% normalized rank error): fixed
+  * ([[KllSketchAgg]], k=800 ⇒ ~0.4% normalized rank error): fixed
   * ~KB buffers, map-side partial merge, identical plan shape and
   * output schema. The sketch tier's accuracy contract is hash-gated by
   * q269's rank-neighborhood claim booleans; PlanAuditSpec pins the
@@ -98,7 +98,6 @@ object Percentiles {
       }
       df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     } else {
-      KllAggregates.register(s)
       df.groupBy(keys.map(col): _*)
         .agg(expr(s"kll_sketch_agg(CAST($valueCol AS DOUBLE), 800)").as("__sk"))
         .select(keys.map(col) ++ ranks.zip(names).map { case (r, n) =>

@@ -65,15 +65,6 @@ object StringSimilarity {
     while (l < max && a.charAt(l) == b.charAt(l)) l += 1
     j + l * 0.1 * (1.0 - j)
   }
-
-  /** Register both expressions with the session's function registry
-    * (same contract as [[VectorFunctions.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_sim", exprs => JaroSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler_sim", exprs => JaroWinklerSimilarity(exprs(0), exprs(1)), "built-in")
-  }
 }
 
 sealed abstract class StringSimilarityExpression extends BinaryExpression {

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Union}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types._
   * exact pairwise self-join (q162) over raw events is the cost being
   * avoided.
   *
-  *  - `theta_sketch_agg(key)`          long keys → serialized CompactSketch
+  *  - `theta_long_sketch_agg(key)`     long keys → serialized CompactSketch
   *  - `theta_intersect_estimate(a, b)` two sketches → |A ∩ B| estimate
   *  - `theta_union_estimate(a, b)`     two sketches → |A ∪ B| estimate
   *
@@ -73,7 +72,7 @@ case class ThetaSketchAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
-  override def prettyName: String = "theta_sketch_agg"
+  override def prettyName: String = "theta_long_sketch_agg"
 }
 
 /** Union of serialized theta sketches — the rollup step over a persisted
@@ -171,31 +170,4 @@ case class ThetaUnionEstimate(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "theta_union_estimate"
-}
-
-object ThetaAggregates {
-  /** Register theta_sketch_agg(key, lgK) / theta_intersect_estimate(a, b)
-    * / theta_union_estimate(a, b); lgK must be a foldable literal. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_sketch_agg", exprs =>
-        ThetaSketchAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_merge_agg", exprs =>
-        ThetaMergeAgg(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_estimate", exprs => ThetaEstimate(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_intersect_estimate",
-      exprs => ThetaIntersectEstimate(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_union_estimate",
-      exprs => ThetaUnionEstimate(exprs(0), exprs(1)), "built-in")
-  }
 }

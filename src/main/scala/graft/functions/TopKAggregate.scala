@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -102,15 +101,4 @@ case class TopKByScore(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(scoreExpr = newChildren(0), idExpr = newChildren(1))
   override def prettyName: String = "topk_by_score"
-}
-
-object TopKAggregate {
-  /** Register topk_by_score(score, id, k) — k must be a foldable literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", exprs =>
-        TopKByScore(exprs(0), exprs(1),
-          exprs(2).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression(),
-      "built-in")
 }

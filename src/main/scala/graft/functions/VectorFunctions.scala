@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for embedding math.
@@ -302,46 +300,4 @@ case class LongSquaredL2(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object VectorFunctions {
-
-  /** Register the vector expressions with the session's function registry
-    * so they're callable from both the Column DSL (via call_function) and
-    * plain SQL. createOrReplaceTempFunction is itself idempotent (a map
-    * put), so no caching — a session cache would pin SparkSessions
-    * strongly for the JVM's lifetime. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq", exprs => SquaredL2Distance(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_long", exprs => LongDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_long", exprs => LongSquaredL2(exprs(0), exprs(1)), "built-in")
-    // xxhash64 with an explicit seed (the functions._ wrapper pins seed
-    // 42); the seed argument must be a foldable literal. Used for the
-    // MinHash permutation family — ANSI-safe, unlike affine (a*h+b)
-    // permutations which overflow LongType under ANSI mode.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_min_hash", exprs => RollingMinHash(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature", exprs => MinHashSignature(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "xxhash64_seed", exprs =>
-        org.apache.spark.sql.catalyst.expressions.XxHash64(
-          exprs.init, exprs.last.eval(null).asInstanceOf[Number].longValue()),
-      "built-in")
-  }
-
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("cosine_sim", a, b)
-  }
-
-  def dotProduct(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("dot_product", a, b)
-  }
 }

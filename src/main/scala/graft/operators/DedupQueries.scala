@@ -248,7 +248,6 @@ object DedupQueries {
     * map over it with transform() and the signature computes in the same
     * projection — the whole signature stage lives in the scan task. */
   private def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     shingleArrays(s, d)
       .select(col("doc_id"),
         expr("transform(shingles, x -> " +
@@ -647,7 +646,6 @@ object DedupQueries {
       * banding bound ≥ 1-(1-(1-θ/π)⁴)⁸ (e.g. ≈0.998 at cosine 0.9), valid
       * because the planes are gaussian ([[dedupPlanes]]). */
     "d41_dedup_embedding" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val limit = s.conf.get("spark.graft.dedup.embedding.exactLimit",
         ExactPairLimit.toString).toLong
       val pairs =
@@ -689,7 +687,6 @@ object DedupQueries {
       * at 0.4; the analytic bound is ≈ 0.998 at the 0.9-cosine near-dup
       * threshold the tier is designed for). */
     "d82_embedding_lsh" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       embeddingPairsLsh(s, d)
         .filter(col("cosine") >= 0.4).orderBy("id1", "id2")
     }),
@@ -1044,7 +1041,6 @@ object DedupQueries {
       * argmax, which is a key-local aggregate. A growing eval suite
       * flips to the banded-LSH candidate path (d82) unchanged. */
     "d129_semantic_decontamination" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val isEval = col("vec_id") % 29 === 0
       val eval = embeddings(s, d).filter(isEval)
         .select(col("vec_id").as("eval_id"), col("embedding").as("ev"))
@@ -1430,7 +1426,6 @@ object DedupQueries {
         // uses (might_contain requires a constant/scalar-subquery filter
         // side). The false-positive survivors are re-checked by the
         // exact join below, so fpp only costs wasted verification.
-        graft.functions.BloomFunctions.register(s)
         val sketch = evalGrams.agg(
           expr("bloom_filter_agg(xxhash64(gk), 1000000L, 8388608L)").as("bf"))
           .head().getAs[Array[Byte]](0)
@@ -1576,7 +1571,6 @@ object DedupQueries {
     * candidate generation costs one equi-join on (band, band_val) — no
     * O(n²) term anywhere. */
   private[graft] def bandedEmbeddings(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val bandCols = (0 until DedupBands).map { b =>
       (0 until DedupBandBits).map { r =>
         val p = b * DedupBandBits + r

@@ -1262,7 +1262,7 @@ object EventQueries {
       * `percentile` (q14 — but it accumulates every fact value into
       * per-group buffers, a 3-buffer concentration point this table
       * cannot afford at 100 TB); above it, the mergeable KLL sketch
-      * ([[graft.functions.KllAggregates]]) — fixed ~KB buffers,
+      * ([[graft.functions.KllSketchAgg]]) — fixed ~KB buffers,
       * partial/final merge, identical plan shape. The forced tier is
       * hash-gated by q269 (rank-neighborhood claim booleans). */
     "q148_robust_stats" -> ((s, d) =>
@@ -1654,9 +1654,8 @@ object EventQueries {
       * pass + user-keyed self-join bounded by per-user type fan-out)
       * exists only to gate the claim. */
     "q170_theta_overlap" -> ((s, d) => {
-      graft.functions.ThetaAggregates.register(s)
       val sk = events(s, d).groupBy("event_type")
-        .agg(expr("theta_sketch_agg(user_id, 12)").as("sk"))
+        .agg(expr("theta_long_sketch_agg(user_id, 12)").as("sk"))
       val est = sk.select(col("event_type").as("type_a"), col("sk").as("sk_a"))
         .crossJoin(broadcast(
           sk.select(col("event_type").as("type_b"), col("sk").as("sk_b"))))
@@ -2282,7 +2281,6 @@ object EventQueries {
         expr("percentile(abs(l_extendedprice - med), 0.5)").as("mad"),
         first("p05").as("p05"), first("p95").as("p95"))
     else {
-      graft.functions.KllAggregates.register(s)
       joined.groupBy("l_returnflag").agg(
         count(lit(1)).as("n"),
         avg("l_extendedprice").as("mean_price"),
@@ -2378,7 +2376,6 @@ object EventQueries {
           round(col("iweighted") * 2.0 / (col("n_keys") * col("n_rows")) -
             (col("n_keys") + 1.0) / col("n_keys"), 9).as("gini"))
     } else {
-      graft.functions.KllAggregates.register(s)
       val m = 200
       val base = counts.agg(
         expr("kll_sketch_agg(CAST(cnt AS DOUBLE), 800)").as("sk"),

@@ -233,7 +233,6 @@ object FunctionQueries {
       * expects (greedy window matching, half transpositions, 0.7 boost
       * threshold, 4-char prefix cap). */
     "q150_jaro_winkler" -> ((s, d) => {
-      graft.functions.StringSimilarity.register(s)
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("c_nationkey").orderBy("c_custkey")
       customer(s, d)
@@ -298,7 +297,6 @@ object FunctionQueries {
       * the claims; the probe-side estimate expression runs on 3 rows per
       * group, never the corpus. */
     "q195_count_min" -> ((s, d) => {
-      graft.functions.CountMinAgg.register(s)
       val (depth, width) = (5, 2048)
       val ev = events(s, d)
       val sk = ev.groupBy("event_type")
@@ -523,7 +521,6 @@ object FunctionQueries {
       * ≤ 16-entry map per event_type — the frequency table never exists;
       * probe estimates are element_at lookups on the tiny map. */
     "q199_heavy_hitters_mg" -> ((s, d) => {
-      graft.functions.MisraGriesAgg.register(s)
       val k = 16
       val ev = events(s, d)
       val sk = ev.groupBy("event_type")
@@ -655,7 +652,6 @@ object FunctionQueries {
       * corpus size; the 5-row estimate table broadcasts back for the
       * rank audit (which exists only to gate the claim). */
     "q166_quantile_rollup" -> ((s, d) => {
-      graft.functions.KllAggregates.register(s)
       val daily = events(s, d)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(expr("kll_sketch_agg(value, 200)").as("sk"))

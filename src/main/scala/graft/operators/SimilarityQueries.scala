@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries {
   import Tables._
-  import graft.functions.VectorFunctions
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -41,8 +40,6 @@ object SimilarityQueries {
       * window row_number, which would sort the full candidate set per
       * query (O(n log n) + full shuffle vs O(n log k) + k-row merge). */
     "s42_ann_brute" -> ((s, d) => {
-      VectorFunctions.register(s)
-      graft.functions.TopKAggregate.register(s)
       val q = embeddings(s, d).filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       val corpus = embeddings(s, d)
@@ -64,7 +61,6 @@ object SimilarityQueries {
       * index), bucket = sign bits; candidates share the query's bucket in
       * any of 4 bands of 4 bits. Rows-only — recall vs s42 is spec-tested. */
     "s43_ann_lsh" -> ((s, d) => {
-      VectorFunctions.register(s)
       val planes = Hyperplanes.planes // 16 x 64, deterministic
       val emb = embeddings(s, d)
       def sigCol = {
@@ -104,7 +100,6 @@ object SimilarityQueries {
       * vector assigned to its nearest centroid (one broadcast join + argmax),
       * queries probe the 2 nearest lists. Rows-only + spec-tested. */
     "s44_ann_ivf" -> ((s, d) => {
-      VectorFunctions.register(s)
       val emb = embeddings(s, d)
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
@@ -330,7 +325,6 @@ object SimilarityQueries {
       * the coarse partition sizes — at the north star K grows with the
       * corpus (s108's note) to hold list width constant. */
     "s119_knn_graph_ivf" -> ((s, d) => {
-      VectorFunctions.register(s)
       val emb = embeddings(s, d)
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
@@ -532,8 +526,6 @@ object SimilarityQueries {
       * semi-filter of the corpus). The rerank never rescans more than the
       * candidate set. */
     "s87_ann_rerank" -> ((s, d) => {
-      VectorFunctions.register(s)
-      graft.functions.TopKAggregate.register(s)
       val Cand = 3 * K
       val emb = embeddings(s, d)
       def quantized(idAs: String, scaleAs: String, qvAs: String) = {
@@ -576,7 +568,6 @@ object SimilarityQueries {
       * embedding pipeline applies before indexing, via the codegen'd
       * dot_product expression + array higher-order functions. */
     "s67_vector_norms" -> ((s, d) => {
-      VectorFunctions.register(s)
       embeddings(s, d)
         .select(
           col("vec_id"),
@@ -608,7 +599,6 @@ object SimilarityQueries {
       * never shuffle. Per-list top-k is a query-partitioned window over
       * candidate rows only; the vector side is s42's broadcast shape. */
     "s103_hybrid_retrieval" -> ((s, d) => {
-      VectorFunctions.register(s)
       val tokens = documents(s, d)
         .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
       val docLen = tokens.groupBy("doc_id").agg(count(lit(1)).as("dl"))
@@ -681,8 +671,6 @@ object SimilarityQueries {
       * featurization cross-modal is just vectors, so every ANN tier in
       * this file applies unchanged. */
     "s139_cross_modal" -> ((s, d) => {
-      VectorFunctions.register(s)
-      graft.functions.TopKAggregate.register(s)
       import s.implicits._
       val Dim = 64
       // 64-segment mean pooling: segment j covers byte positions
@@ -749,7 +737,6 @@ object SimilarityQueries {
       * 32× memory shrink that lets a billion vectors fit a cluster's
       * RAM); the distance table is 2048 broadcast rows per query set. */
     "s140_pq_ann" -> ((s, d) => {
-      VectorFunctions.register(s)
       val Shortlist = 5 * K
       val wA = Window.partitionBy("query_id")
         .orderBy(col("approx_dist_e9"), col("neighbor_id"))
@@ -775,7 +762,6 @@ object SimilarityQueries {
       * same broadcast of KB-sized tables — nothing here changes shape,
       * only nlist grows. */
     "s144_ivf_pq" -> ((s, d) => {
-      VectorFunctions.register(s)
       val emb = embeddings(s, d)
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
@@ -830,8 +816,6 @@ object SimilarityQueries {
       * candidate generation itself (s42's broadcast-scored pass, or any
       * ANN tier in its place). */
     "s159_mmr_diversify" -> ((s, d) => {
-      VectorFunctions.register(s)
-      graft.functions.TopKAggregate.register(s)
       val lam = 0.7
       val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") < NumQueries)
@@ -954,7 +938,6 @@ object SimilarityQueries {
       * shape); when the query set itself is corpus-sized the banded
       * LSH tier (s43/d82) is the documented scale path. */
     "s225_radius_search" -> ((s, d) => {
-      VectorFunctions.register(s)
       val q = embeddings(s, d).filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       val corpus = embeddings(s, d)
@@ -1020,7 +1003,6 @@ object SimilarityQueries {
       * Scale shape: bounded query broadcast; the corpus scan prunes on
       * label; rank window bounded at 5 per query. */
     "s230_ann_filtered" -> ((s, d) => {
-      VectorFunctions.register(s)
       val q = embeddings(s, d).filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
           col("label").as("qlabel"))
@@ -1052,7 +1034,6 @@ object SimilarityQueries {
       * Scale shape: signature scan → one equi-join on (band, band_val)
       * → bounded verify; no corpus×corpus term anywhere. */
     "s237_radius_lsh" -> ((s, d) => {
-      VectorFunctions.register(s)
       val banded = DedupQueries.bandedEmbeddings(s, d)
         .select("vec_id", "band", "band_val")
       val qb = banded.filter(col("vec_id") < NumQueries)
@@ -1132,8 +1113,6 @@ object SimilarityQueries {
     }),
 
     "s163_maxsim" -> ((s, d) => {
-      VectorFunctions.register(s)
-      graft.functions.TopKAggregate.register(s)
       val emb = embeddings(s, d)
       val docs = emb.select((col("vec_id") / 4).cast("long").as("doc"),
         col("vec_id").as("dv_id"), col("embedding").as("dv"))
@@ -1270,7 +1249,6 @@ object SimilarityQueries {
       * The three windows run on queries×corpus rows of 3 longs each,
       * and the roll-up is one query_id-keyed aggregate. */
     "s197_mrl_recall" -> ((s, d) => {
-      VectorFunctions.register(s)
       val emb = embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       val q = emb.filter(col("vec_id") < NumQueries)
@@ -1311,7 +1289,6 @@ object SimilarityQueries {
       * the codebook is K rows broadcast; training is the s90 bounded-
       * centroid driver barrier. */
     "s214_ivf_trained" -> ((s, d) => {
-      VectorFunctions.register(s)
       import s.implicits._
       // same conditional spread as kmeansAssignQ (r16): the Lloyd
       // rounds and assignment otherwise inherit the scan's one partition
@@ -1366,7 +1343,6 @@ object SimilarityQueries {
       * halve s140's 8-bit sketch: a 64-dim float vector serves from 4
       * bytes. */
     "s210_pq_trained" -> ((s, d) => {
-      VectorFunctions.register(s)
       val cents = pqTrainedCents(s, d)
       val qsv = pqQuantSubs(s, d)
       val enc = qsv.join(broadcast(cents), "sub")
@@ -1404,7 +1380,6 @@ object SimilarityQueries {
       * (swap in any ANN tier at scale), two windows, a 10-row-per-query
       * roll-up. */
     "s201_ndcg" -> ((s, d) => {
-      VectorFunctions.register(s)
       val emb = embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       val q = emb.filter(col("vec_id") < NumQueries)
@@ -1436,7 +1411,6 @@ object SimilarityQueries {
     }),
 
     "s191_embedding_gram" -> ((s, d) => {
-      graft.functions.GramMatrixAgg.register(s)
       val D = 64
       val maxabs = array_max(transform(col("embedding"),
         x => abs(x.cast("double"))))
@@ -1466,7 +1440,6 @@ object SimilarityQueries {
     * bounded heap per anchor. */
   private def hardNegativesFrom(
       s: SparkSession, d: String, scored: DataFrame): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
     val labels = embeddings(s, d).select(col("vec_id"), col("label"))
     scored
       .join(labels.select(col("vec_id").as("src"),
@@ -1639,7 +1612,6 @@ object SimilarityQueries {
     * per block, clamped to [8, 256]) so task size is bounded by the gate,
     * not growing with it. */
   private def knnExactScored(s: SparkSession, d: String, n: Long): DataFrame = {
-    VectorFunctions.register(s)
     val B = math.min(256L, math.max(8L, (n + 999L) / 1000L))
     val a = embeddings(s, d).select(
       (col("vec_id") % B).as("bl1"), col("vec_id").as("src"),
@@ -1668,7 +1640,6 @@ object SimilarityQueries {
     * round 8). The vector re-attach joins are plain equi-joins on
     * vec_id — broadcast at test scale, shuffled co-partitions at 100 TB. */
   private def knnLshScored(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val banded = DedupQueries.bandedEmbeddings(s, d).select("vec_id", "band", "band_val")
     val pairs = banded.toDF("src", "band", "band_val")
       .join(banded.toDF("dst", "band", "band_val"), Seq("band", "band_val"))
@@ -1687,7 +1658,6 @@ object SimilarityQueries {
     * (ties break to the smaller neighbor id, matching the oracles'
     * row_number order), identical for both candidate tiers. */
   private def knnTopK(s: SparkSession, scored: DataFrame): DataFrame = {
-    graft.functions.TopKAggregate.register(s)
     scored.groupBy("src")
       .agg(call_function("topk_by_score", col("cosine"), col("dst"), lit(KnnK))
         .as("top"))
@@ -1762,7 +1732,6 @@ object SimilarityQueries {
   private def kmeansAssignOver(s: SparkSession, q0: DataFrame,
       cents: Seq[(Long, Seq[Long])]): DataFrame = {
     import s.implicits._
-    VectorFunctions.register(s)
     q0.crossJoin(broadcast(cents.toDF("cid", "cv")))
       .withColumn("dist_sq", call_function("l2sq_long", col("q"), col("cv")))
       .groupBy("vec_id")

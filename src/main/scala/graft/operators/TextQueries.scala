@@ -126,7 +126,6 @@ object TextQueries {
       * wraparound with HUGEINT (see [[rollingOracle]]); the spec
       * additionally pins collision semantics. */
     "t66_fingerprint_rolling" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       documents(s, d)
         .select(
           col("doc_id"),

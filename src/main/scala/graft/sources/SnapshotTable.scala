@@ -1667,7 +1667,7 @@ object SnapshotTable {
     * nothing. Returns the committed version. */
   def analyzeBloom(spark: SparkSession, dir: String, column: String,
       bitsPerFile: Long = 1L << 20): Long = {
-    graft.functions.BloomFunctions.register(spark)
+    graft.plans.GraftExtensions.ensure(spark)
     val key = BloomIdxPrefix + column
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
@@ -1764,7 +1764,7 @@ object SnapshotTable {
       // letting columnType NoSuchElement on files.head (ADVICE r15)
       case Some(_) if st.files.isEmpty => Seq.empty
       case Some(rel) =>
-        graft.functions.BloomFunctions.register(spark)
+        graft.plans.GraftExtensions.ensure(spark)
         import spark.implicits._
         // the probe hash MUST be the same xxhash64 the index was built
         // with — engine-computed over the column's OWN type

@@ -401,7 +401,7 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          graft.functions.KllAggregates.register(s)
+          graft.plans.GraftExtensions.ensure(s)
           val cells = batch.toDF()
             .groupBy(to_date(col("ts")).as("day"), col("event_type"))
             .agg(expr("kll_sketch_agg(value, 200)").as("sk"),
@@ -422,7 +422,7 @@ object EventStream {
     * KB blobs, independent of how much raw stream ever flowed. */
   def sketchQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.KllAggregates.register(spark)
+    graft.plans.GraftExtensions.ensure(spark)
     graft.sources.SnapshotTable.read(spark, dir, None)
       .groupBy("event_type")
       .agg(count(org.apache.spark.sql.functions.lit(1)).as("n_cells"),
@@ -446,10 +446,10 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          graft.functions.ThetaAggregates.register(s)
+          graft.plans.GraftExtensions.ensure(s)
           val cells = batch.toDF()
             .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-            .agg(expr("theta_sketch_agg(user_id, 12)").as("sk"))
+            .agg(expr("theta_long_sketch_agg(user_id, 12)").as("sk"))
           graft.sources.SnapshotTable.appendBatch(
             s, dir, cells, "event_type", batchId): Unit
         }
@@ -465,7 +465,7 @@ object EventStream {
     * estimated distinct users from unioning every persisted cell. */
   def distinctRollup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.ThetaAggregates.register(spark)
+    graft.plans.GraftExtensions.ensure(spark)
     graft.sources.SnapshotTable.read(spark, dir, None)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_cells"),

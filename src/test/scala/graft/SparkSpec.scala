@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local session per suite, UTC, parity-mode
-  * ANSI off (SURVEY H5), small shuffle partition count for test scale. */
+/** Shared session fixture: the engine's own session factory (so tests run
+  * in the SQL mode the benchmark and the oracle gate run in), with a small
+  * shuffle partition count for test scale. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(getClass.getSimpleName, "4", "4")
 
   val sf: String = "/root/testdata/sf0.001"
 

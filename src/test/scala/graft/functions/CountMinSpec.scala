@@ -14,7 +14,6 @@ class CountMinSpec extends SparkSpec {
   private val width = 2048
 
   test("sketch is invariant to partitioning (merge = elementwise add)") {
-    CountMinAgg.register(spark)
     val keys = (0L until 5000L).map(i => i % 97L).toDF("k")
     def sketchOf(parts: Int): Seq[Long] =
       keys.repartition(parts)
@@ -24,7 +23,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("estimates never under-count, and are exact for sparse key sets") {
-    CountMinAgg.register(spark)
     // 97 distinct keys into 2048 counters: splitmix64 spreads them
     // with few collisions; every estimate must be >= exact, and the
     // total over-count across all keys is bounded by depth * n
@@ -45,7 +43,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("misra-gries: theorem bounds hold under every partitioning, on a skewed stream") {
-    MisraGriesAgg.register(spark)
     val k = 8
     // zipf-ish skew: key j appears ~ 2000/(j+1) times, 40 distinct keys
     val rows = (0 until 40).flatMap(j => Seq.fill(2000 / (j + 1))(j.toLong))
@@ -68,7 +65,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("total slot in the buffer carries n") {
-    CountMinAgg.register(spark)
     val keys = (0L until 1234L).toDF("k")
     val buf = keys.agg(expr(s"count_min_agg(k, $depth, $width)")).head().getSeq[Long](0)
     assert(buf.length == depth * width + 1)

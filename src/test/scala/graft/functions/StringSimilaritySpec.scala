@@ -53,7 +53,6 @@ class StringSimilaritySpec extends SparkSpec {
     assert(!plan.toLowerCase.contains("scalaudf"),
       s"interpreted UDF leaked into the plan:\n$plan")
     // null propagation through the binary expression
-    StringSimilarity.register(spark)
     val withNull = Seq((Some("x"), None: Option[String])).toDF("a", "b")
       .select(call_function("jaro_sim", col("a"), col("b")).as("s"))
     assert(withNull.collect()(0).isNullAt(0))

@@ -80,7 +80,6 @@ class BiOpsSpec extends SparkSpec {
 
   test("kll sketch: accuracy, mergeability, and serialization roundtrip") {
     import spark.implicits._
-    graft.functions.KllAggregates.register(spark)
     val df = (1 to 10000).map(i => (i % 4, i.toDouble)).toDF("g", "v")
     // one-shot sketch: p50 within the ±3% rank band used by the gate
     val p50 = df.agg(expr("kll_quantile(kll_sketch_agg(v, 200), 0.5d)"))
@@ -142,20 +141,19 @@ class BiOpsSpec extends SparkSpec {
 
   test("theta sketch: exact mode, estimation error, and set algebra") {
     import spark.implicits._
-    graft.functions.ThetaAggregates.register(spark)
     // exact mode: below lgK=12's 4096 retained hashes the estimate IS
     // the exact distinct count
     val small = (1L to 1000L).toDF("u")
-      .agg(expr("theta_sketch_agg(u, 12)").as("sk"))
+      .agg(expr("theta_long_sketch_agg(u, 12)").as("sk"))
       .select(expr("theta_union_estimate(sk, sk)")).head().getDouble(0)
     assert(small == 1000.0, s"exact-mode estimate drifted: $small")
     // estimation mode (100k ≫ 4096): union and intersection estimates
     // within the theta error envelope; theta hashing/compaction is
     // seed-fixed and order-independent, so these are deterministic
     val a = (1L to 60000L).toDF("u")
-      .agg(expr("theta_sketch_agg(u, 12)").as("sk"))
+      .agg(expr("theta_long_sketch_agg(u, 12)").as("sk"))
     val b = (40001L to 100000L).toDF("u")
-      .agg(expr("theta_sketch_agg(u, 12)").as("sk2"))
+      .agg(expr("theta_long_sketch_agg(u, 12)").as("sk2"))
     val r = a.crossJoin(b).select(
       expr("theta_union_estimate(sk, sk2)"),
       expr("theta_intersect_estimate(sk, sk2)")).head()
@@ -515,7 +513,6 @@ class BiOpsSpec extends SparkSpec {
 
   test("gram matrix aggregate: hand-computed moments, partition-order-free") {
     import spark.implicits._
-    graft.functions.GramMatrixAgg.register(spark)
     // vectors (1,2) and (3,4): Σxy = [[10,14],[14,20]], Σx = [4,6], n = 2
     def run(parts: Int): Seq[Long] =
       Seq(Seq(1L, 2L), Seq(3L, 4L)).toDF("q").repartition(parts)

@@ -301,7 +301,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim expression matches manual computation and handles zero vectors") {
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f)),
       (Array(1.0f, 0.0f, 0.0f), Array(0.0f, 1.0f, 0.0f)),
@@ -361,7 +360,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("t66: rolling-hash fingerprints — equal texts collide, shared runs likely collide") {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.RollingMinHash
     val a = "the quick brown fox jumps over the lazy dog and keeps running far away"
     val b = "a different prefix here but jumps over the lazy dog and keeps running far away"

@@ -616,7 +616,7 @@ class PlanAuditSpec extends SparkSpec {
     // blobs cross the exchange; the sketch-pair cross is the sanctioned
     // 5-row broadcast, never a CartesianProduct
     val theta = plan("q170_theta_overlap")
-    assert(theta.contains("partial_theta_sketch_agg"),
+    assert(theta.contains("partial_theta_long_sketch_agg"),
       s"q170: map-side partial sketch missing:\n$theta")
     assert(theta.contains("ObjectHashAggregate"),
       s"q170: sketch agg must be ObjectHashAggregate:\n$theta")

@@ -1,41 +1,47 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 
-/** The extensions entry point must inject every custom function without
-  * error — the same set the runtime path registers — and the injected
-  * constructors must evaluate; end-to-end SQL execution is covered by
-  * TypedSqlSpec against the runtime registration path (both go through
-  * the same expression constructors).
+/** The function catalog has one registration path: the extension installs
+  * every catalog entry on a factory-built session, and `ensure` brings any
+  * other session to the same catalog without replacing a function.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
-  test("extension injects all custom functions into a SparkSessionExtensions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw
-    // the extensions path must cover the SAME function names as the
-    // runtime registration path — a function present in only one means a
-    // SQL user and a Column-DSL user see different catalogs
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.TopKAggregate.register(spark)
-    graft.functions.StringSimilarity.register(spark)
-    graft.functions.KllAggregates.register(spark)
-    graft.functions.ThetaAggregates.register(spark)
-    graft.functions.GramMatrixAgg.register(spark)
-    graft.functions.CountMinAgg.register(spark)
-    graft.functions.MisraGriesAgg.register(spark)
-    for (fn <- Seq("cosine_sim", "dot_product", "topk_by_score", "xxhash64_seed",
-        "rolling_min_hash", "minhash_signature", "l2sq",
-        "jaro_sim", "jaro_winkler_sim",
-        "kll_sketch_agg", "kll_merge_agg", "kll_quantile",
-        "theta_sketch_agg", "theta_merge_agg", "theta_estimate",
-        "theta_intersect_estimate", "theta_union_estimate",
-        "gram_matrix_agg", "count_min_agg", "cms_estimate",
-        "misra_gries_agg")) {
-      assert(spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(fn)),
-        s"$fn missing from runtime registry")
-    }
+  private def missing(s: org.apache.spark.sql.SparkSession): Seq[String] =
+    GraftExtensions.catalog.map(_.name)
+      .filterNot(n => s.catalog.functionExists(n))
+
+  test("the catalog lists distinct names, none a Spark built-in") {
+    val names = GraftExtensions.catalog.map(_.name)
+    assert(names.distinct == names)
+    // a shadowed built-in would make `ensure` keep Spark's function and
+    // the extension log a replacement on every session
+    assert(GraftExtensions.catalog.map(_.id)
+      .filter(FunctionRegistry.builtin.functionExists).isEmpty)
+  }
+
+  test("factory session resolves every catalog name") {
+    assert(missing(spark).isEmpty)
+    assert(GraftExtensions.ensure(spark).isEmpty)
+  }
+
+  test("a session without the extension resolves every name after one ensure") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    // a new session inherits the extension; take its functions away to
+    // stand for a session the engine did not build
+    GraftExtensions.catalog.foreach(f => registry.dropFunction(f.id))
+    assert(missing(s) == GraftExtensions.catalog.map(_.name))
+    assert(GraftExtensions.ensure(s) == GraftExtensions.catalog.map(_.name))
+    assert(missing(s).isEmpty)
+    assert(GraftExtensions.ensure(s).isEmpty, "a second ensure registered again")
+    // the functions evaluate through the registry ensure filled
+    val row = s.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)), " +
+      "jaro_sim('abc', 'abc')").head()
+    assert(math.abs(row.getDouble(0) - 1.0) < 1e-12)
+    assert(row.getDouble(1) == 1.0)
   }
 
   test("injected expression constructors build and evaluate") {
