@@ -30,13 +30,15 @@ object Model {
     date_format(c, "yyyyMMdd").cast("long")
 
   def apply(t: RawTables): StarSchema = {
-    // dim_date (ref :147-172): daily sequence over [min, max] purchase ts.
-    // pandas date_range keeps the time-of-day of min; sequence over
-    // timestamps with a 1-day interval does the same.
+    // dim_date (ref :147-172): daily sequence over the purchase days. It
+    // starts at the first purchase's midnight: a sequence from the first
+    // purchase TIME (pandas date_range semantics) misses the last day when
+    // that purchase is earlier in its day, an FK hole in fact.date_id.
     val dimDate = t.orders
       .agg(min("order_purchase_timestamp").as("lo"), max("order_purchase_timestamp").as("hi"))
       .where(col("lo").isNotNull && col("hi").isNotNull) // P6 guard
-      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("date"))
+      .select(explode(sequence(date_trunc("DAY", col("lo")), col("hi"),
+        expr("interval 1 day"))).as("date"))
       .select(
         col("date"),
         year(col("date")).as("year"),

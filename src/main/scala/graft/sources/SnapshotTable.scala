@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.StructType
   * Design (the public Delta/Iceberg core idea, reduced to its minimum):
   *  - data files are IMMUTABLE and uniquely named; a mutation only ever
   *    ADDS files, never rewrites or deletes one in place;
-  *  - `_manifests/v{N}.manifest` lists every data file of snapshot N
-  *    (one relative path per line); the manifest is staged to a temp
-  *    name and atomically PUBLISHED into place ([[publishIfAbsent]]:
+  *  - `_manifests/v{N}.manifest` records snapshot N's files, DVs, stats
+  *    and headers ([[Manifest]] is the format); the manifest is staged
+  *    to a temp name and atomically PUBLISHED into place ([[publishIfAbsent]]:
   *    rename-without-overwrite on HDFS, link(2) on local filesystems —
   *    POSIX rename(2) would silently REPLACE an existing destination,
   *    so plain rename is not a CAS there);
@@ -29,9 +29,9 @@ import org.apache.spark.sql.types.StructType
   *    a lock service, and without the lost update a blind version-bump
   *    retry would cause (re-publishing a pre-race file/DV/stats list at
   *    the advanced version silently drops the winner's commit);
-  *  - row-level deletes can commit as DELETION VECTORS ('~'-prefixed
-  *    manifest lines naming parquet sidecars of (file, row-index)
-  *    addresses under `_dv/`) — see [[deleteWhereDV]]: the data-file
+  *  - row-level deletes can commit as DELETION VECTORS (manifest
+  *    entries naming parquet sidecars of (file, row-index) addresses
+  *    under `_dv/`) — see [[deleteWhereDV]]: the data-file
   *    list is untouched, readers anti-join the addresses out, and
   *    [[compact]] folds accumulated DVs back into data files.
   *
@@ -246,24 +246,17 @@ object SnapshotTable {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def manifestVersion(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("v") && n.endsWith(".manifest"))
-      n.stripPrefix("v").stripSuffix(".manifest").toLongOption
-    else None
-  }
-
   /** Published manifests are immutable (the CAS primitive refuses an
     * existing destination; the one retract path removes its cache entry
-    * below), so their parsed lines are memoized per path — every verb
-    * calls latestState several times and re-reading + re-parsing the
+    * below), so their decoded form is memoized per path — every verb
+    * calls latestState several times and re-reading + re-decoding the
     * full text each time was measurable driver-gap across the
     * commit-ladder gates (r16). `manifestReadCount` still counts every
     * LOGICAL resolution (cache hits included): the O(1)-commits-
     * vs-history pins (q293, StreamingReplaySpec) measure how many
     * manifests a verb must consult, which memoization does not change. */
-  private val manifestLinesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private val manifestCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
 
   /** Size cap shared by every metadata memo map here (ADVICE r16: the
     * r16 caches grew for the JVM lifetime — at the 10^5–10^6-file scale
@@ -300,7 +293,7 @@ object SnapshotTable {
     * fs.listStatus results ("file:/tmp/...", the latestState side) —
     * unqualified keys split the cache and let a REUSED path (a bench
     * pass tearing down and rebuilding the same gate dir) serve stale
-    * lines. */
+    * entries. */
   private def manifestCacheKey(fs: FileSystem, path: Path): String =
     fs.makeQualified(path).toString
 
@@ -320,29 +313,27 @@ object SnapshotTable {
           .map(_.sparkContext.hadoopConfiguration)
           .getOrElse(new org.apache.hadoop.conf.Configuration())), p)
       catch { case scala.util.control.NonFatal(_) => path }
-    manifestLinesCache.remove(key)
+    manifestCache.remove(key)
     stateCache.clear()
   }
 
-  private def readManifest(fs: FileSystem, path: Path): Seq[String] = {
+  private def readManifest(fs: FileSystem, path: Path): Manifest = {
     manifestReadCount.incrementAndGet()
+    def load(): Manifest = {
+      val in = fs.open(path)
+      val bytes = try in.readAllBytes() finally in.close()
+      Manifest.decode(bytes, path.toString)
+    }
     // only VERSION manifests are immutable-once-published; branch
     // manifests are staged, swept and may be recreated — never cached
-    if (manifestVersion(path).isEmpty) {
-      val in = fs.open(path)
-      try return scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
+    if (Manifest.versionOf(path.getName).isEmpty) return load()
     val key = manifestCacheKey(fs, path)
-    val cached = manifestLinesCache.get(key)
+    val cached = manifestCache.get(key)
     if (cached != null) return cached
-    val in = fs.open(path)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    manifestLinesCache.put(key, lines)
-    bounded(manifestLinesCache)
-    lines
+    val m = load()
+    manifestCache.put(key, m)
+    bounded(manifestCache)
+    m
   }
 
   // ---- manifest parquet checkpoints + delta manifests (r17) ----------
@@ -352,15 +343,15 @@ object SnapshotTable {
   // is a file-count-sized write on every commit, the last
   // file-count-linear driver path on the hottest code in the module.
   // This revision writes DELTA manifests (the Delta Lake commit-log
-  // shape, reduced to this substrate): a commit whose file/DV/stats
-  // lists are reachable from the previous version's state as
+  // shape, reduced to this substrate): a commit whose content is
+  // reachable from the previous version's as
   // (carry.filterNot(removed) ++ appended) — every verb here builds its
-  // lists exactly that way — publishes only `-`/`+` lines plus a
-  // `#base=<v-1>` header; any other shape (restore's reorders, a
-  // prev-state that is unreachable) falls back to a FULL manifest, so
-  // correctness never depends on the delta encoding. Every
+  // lists exactly that way — publishes only the removed/added entries
+  // against base v-1 ([[Manifest.Delta]]); any other shape (restore's
+  // reorders, a prev-state that is unreachable) falls back to a FULL
+  // manifest, so correctness never depends on the delta encoding. Every
   // checkpointInterval commits the writer also publishes
-  // `ckpt.v{N}.parquet` — the full state, one line per row, written
+  // `ckpt.v{N}.parquet` — the full state, one entry per row, written
   // DRIVER-side through parquet-hadoop (metadata-sized, no Spark job)
   // and CAS-published like a manifest. Reading state at v replays at
   // most the delta tail since the nearest memoized state / checkpoint /
@@ -369,38 +360,40 @@ object SnapshotTable {
   // checkpoint at its kept floor BEFORE deleting dropped manifests, so
   // reconstruction never needs reclaimed history.
 
-  private val BaseKey = "base"
-
-  /** Full reconstructed snapshot state at one version: data files, DV
-    * sidecars, stats lines (normalized to the current field order) and
-    * the version's own header map (`base` stripped). Immutable once the
+  /** Everything a commit must derive from: a snapshot's version, its
+    * content, and its header map. `carried` is the subset of headers
+    * every subsequent commit must re-publish verbatim (the per-query
+    * `lastbatch.` replay markers among them) — dropping them would
+    * reopen the O(history) replay scan and, worse, let an ancient replay
+    * outside the lookback window double-apply. Immutable once the
     * version is published — memoized per qualified manifest path (the
     * retract and surgery paths invalidate). */
-  private final case class SnapState(files: Seq[String], dvs: Seq[String],
-      stats: Seq[String], meta: Map[String, String])
+  private final case class TableState(version: Long, snap: Manifest.Snapshot,
+      meta: Map[String, String]) {
+    def files: Seq[String] = snap.files
+    def dvs: Seq[String] = snap.dvs
+    def stats: Seq[Manifest.FileStat] = snap.stats
+    def carried: Map[String, String] =
+      meta.filter { case (k, _) => isCarriedHeader(k) }
+  }
+
+  private val EmptyState = TableState(0L, Manifest.Snapshot(), Map.empty)
 
   private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SnapState]()
+    new java.util.concurrent.ConcurrentHashMap[String, TableState]()
 
   /** Test seam: drop every metadata memo — simulates a cold JVM so
     * specs can pin the COLD costs (reconstruction walk length, footer
     * re-reads) instead of measuring their own cache warmth. */
   private[graft] def clearMetadataCaches(): Unit = {
-    manifestLinesCache.clear(); stateCache.clear(); fileSchemaCache.clear()
+    manifestCache.clear(); stateCache.clear(); fileSchemaCache.clear()
   }
 
   private def manifestPathOf(mdir: Path, v: Long): Path =
-    new Path(mdir, s"v$v.manifest")
+    new Path(mdir, Manifest.versionFile(v))
 
   private def ckptPath(mdir: Path, v: Long): Path =
-    new Path(mdir, s"ckpt.v$v.parquet")
-
-  private def ckptVersion(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("ckpt.v") && n.endsWith(".parquet"))
-      n.stripPrefix("ckpt.v").stripSuffix(".parquet").toLongOption
-    else None
-  }
+    new Path(mdir, Manifest.checkpointFile(v))
 
   /** How often a commit also materializes a full parquet checkpoint
     * (every N versions; 0 disables). Bounds every reconstruction walk
@@ -414,16 +407,15 @@ object SnapshotTable {
     .parseMessageType("message graft_ckpt { required binary line (UTF8); }")
 
   /** Publish the parquet checkpoint sidecar for version `v` if absent:
-    * the full data/DV/stats line list in manifest order, one row per
-    * line, written DRIVER-side (metadata-sized — no Spark job) and
+    * the full content as [[Manifest.checkpointRows]], one row per
+    * entry, written DRIVER-side (metadata-sized — no Spark job) and
     * published through the same CAS primitive as manifests. Content is
     * a pure function of the version, so racing writers are harmless. */
   private def writeCkpt(fs: FileSystem, mdir: Path, v: Long,
-      files: Seq[String], dvs: Seq[String], stats: Seq[String]): Unit = {
+      snap: Manifest.Snapshot): Unit = {
     val dest = ckptPath(mdir, v)
     if (fs.exists(dest)) return
-    val tmp = new Path(mdir,
-      s".ckpt.v$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val tmp = new Path(mdir, Manifest.tmpFile(dest.getName))
     val conf = new org.apache.hadoop.conf.Configuration(fs.getConf)
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(CkptSchema, conf)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -433,64 +425,27 @@ object SnapshotTable {
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
     val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(CkptSchema)
-    try (files.iterator ++ dvs.iterator.map("~" + _) ++
-        stats.iterator.map("%" + _)).foreach { l =>
+    try Manifest.checkpointRows(snap).foreach { l =>
       writer.write(gf.newGroup().append("line", l))
     } finally writer.close()
     if (!publishIfAbsent(fs, tmp, dest)) fs.delete(tmp, false): Unit
   }
 
-  /** The checkpointed (files, dvs, stats) at `v`, or None. Driver-side
-    * single-file parquet read — no Spark job. */
+  /** The checkpointed content at `v`, or None. Driver-side single-file
+    * parquet read — no Spark job. */
   private def readCkpt(fs: FileSystem, mdir: Path,
-      v: Long): Option[(Seq[String], Seq[String], Seq[String])] = {
+      v: Long): Option[Manifest.Snapshot] = {
     val p = ckptPath(mdir, v)
     if (!fs.exists(p)) return None
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
       .withConf(fs.getConf).build()
-    val files = Seq.newBuilder[String]
-    val dvs = Seq.newBuilder[String]
-    val stats = Seq.newBuilder[String]
+    val rows = Seq.newBuilder[String]
     try {
       var g = reader.read()
-      while (g != null) {
-        val l = g.getString("line", 0)
-        if (l.startsWith("~")) dvs += l.substring(1)
-        else if (l.startsWith("%")) stats += l.substring(1)
-        else files += l
-        g = reader.read()
-      }
+      while (g != null) { rows += g.getString("line", 0); g = reader.read() }
     } finally reader.close()
-    Some((files.result(), dvs.result(), stats.result()))
-  }
-
-  /** Apply one delta manifest's `-`/`+` lines to the base version's
-    * full lists. Additions preserve their manifest order and append
-    * after the carried lines; removals are by set — exactly the
-    * (carry.filterNot ++ appended) shape every commit verb builds,
-    * VERIFIED at write time ([[writeManifest]] publishes a full
-    * manifest whenever a commit's lists are not reachable this way). */
-  private def applyDelta(base: (Seq[String], Seq[String], Seq[String]),
-      raw: Seq[String]): (Seq[String], Seq[String], Seq[String]) = {
-    val remData = Set.newBuilder[String]; val addData = Seq.newBuilder[String]
-    val remDv = Set.newBuilder[String]; val addDv = Seq.newBuilder[String]
-    val remStat = Set.newBuilder[String]; val addStat = Seq.newBuilder[String]
-    raw.foreach { l =>
-      if (l.nonEmpty && (l.charAt(0) == '+' || l.charAt(0) == '-')) {
-        val add = l.charAt(0) == '+'
-        val p = l.substring(1)
-        if (p.startsWith("~")) {
-          if (add) addDv += p.substring(1) else remDv += p.substring(1)
-        } else if (p.startsWith("%")) {
-          if (add) addStat += p.substring(1) else remStat += p.substring(1)
-        } else if (add) addData += p else remData += p
-      }
-    }
-    val (rd, rv, rs) = (remData.result(), remDv.result(), remStat.result())
-    (base._1.filterNot(rd.contains) ++ addData.result(),
-      base._2.filterNot(rv.contains) ++ addDv.result(),
-      base._3.filterNot(rs.contains) ++ addStat.result())
+    Some(Manifest.fromCheckpointRows(rows.result()))
   }
 
   /** Full state of snapshot `v`: memoized, else reconstructed from the
@@ -500,8 +455,7 @@ object SnapshotTable {
     * FileNotFound: a concurrent vacuum materializes a checkpoint at its
     * kept floor BEFORE deleting dropped manifests, so the retry
     * resolves through the checkpoint. */
-  private def stateAt(fs: FileSystem, root: Path, dir: String,
-      v: Long): SnapState = {
+  private def stateAt(fs: FileSystem, root: Path, v: Long): TableState = {
     val mdir = new Path(root, ManifestDir)
     def key(w: Long): String = manifestCacheKey(fs, manifestPathOf(mdir, w))
     val hit = stateCache.get(key(v))
@@ -509,40 +463,37 @@ object SnapshotTable {
     var retries = 0
     while (true) {
       try {
-        val rawV = readManifest(fs, manifestPathOf(mdir, v))
-        val metaV = metaOf(rawV)
-        val lists: (Seq[String], Seq[String], Seq[String]) =
-          if (!metaV.contains(BaseKey))
-            (dataLines(rawV), dvLines(rawV), normalizedStats(rawV))
-          else {
+        val top = readManifest(fs, manifestPathOf(mdir, v))
+        val snap = top.body match {
+          case Manifest.Full(s) => s
+          case _: Manifest.Delta =>
             // walk down to a reconstruction base, collecting the delta
             // chain (ascending after the prepends)
-            var chain = List((v, rawV))
-            var base: (Seq[String], Seq[String], Seq[String]) = null
+            var chain = List((v, top))
+            var base: Manifest.Snapshot = null
             var w = v - 1
             while (base == null) {
               val cached = stateCache.get(key(w))
-              if (cached != null) base = (cached.files, cached.dvs, cached.stats)
+              if (cached != null) base = cached.snap
               else readCkpt(fs, mdir, w) match {
-                case Some(t) => base = t
+                case Some(s) => base = s
                 case None =>
-                  val raw = readManifest(fs, manifestPathOf(mdir, w))
-                  val meta = metaOf(raw)
-                  if (!meta.contains(BaseKey))
-                    base = (dataLines(raw), dvLines(raw), normalizedStats(raw))
-                  else { chain ::= ((w, raw)); w -= 1 }
+                  val m = readManifest(fs, manifestPathOf(mdir, w))
+                  m.body match {
+                    case Manifest.Full(s) => base = s
+                    case _: Manifest.Delta => chain ::= ((w, m)); w -= 1
+                  }
               }
             }
-            var acc = base
-            chain.foreach { case (w2, raw) =>
-              acc = applyDelta(acc, raw)
+            chain.foldLeft(base) { case (acc, (w2, m)) =>
+              val Manifest.Delta(_, removed, added) = m.body
+              val next = acc.applyDelta(removed, added)
               if (w2 < v) // memoize the chain's intermediate states too
-                stateCache.put(key(w2),
-                  SnapState(acc._1, acc._2, acc._3, metaOf(raw) - BaseKey))
+                stateCache.put(key(w2), TableState(w2, next, m.meta))
+              next
             }
-            acc
-          }
-        val st = SnapState(lists._1, lists._2, lists._3, metaV - BaseKey)
+        }
+        val st = TableState(v, snap, top.meta)
         stateCache.put(key(v), st)
         bounded(stateCache)
         return st
@@ -571,136 +522,6 @@ object SnapshotTable {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(partDir.split('=').last)
 
-  /** `#k=v` header lines of a manifest as a map. */
-  private def metaOf(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith("#")).flatMap { l =>
-      l.stripPrefix("#").split("=", 2) match {
-        case Array(k, value) => Some(k -> value)
-        case _ => None
-      }
-    }.toMap
-
-  /** Data-file lines of a manifest (metadata lines start with '#',
-    * deletion-vector lines with '~', file-stats lines with '%'). */
-  private def dataLines(lines: Seq[String]): Seq[String] =
-    lines.filter(l => l.nonEmpty && !l.startsWith("#") &&
-      !l.startsWith("~") && !l.startsWith("%"))
-
-  /** Deletion-vector sidecar lines of a manifest ('~'-prefixed relative
-    * paths under `_dv/`). */
-  private def dvLines(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith("~")).map(_.stripPrefix("~"))
-
-  /** Per-file column-stats lines ('%'-prefixed `col|min|max|file`) —
-    * the data-skipping index. Self-describing (the column name rides in
-    * the line), so stats survive commits without separate header
-    * plumbing and several columns can be indexed side by side. The file
-    * path is the LAST field and the parse is limit-4, so a partition
-    * VALUE containing the '|' delimiter cannot corrupt the line
-    * (ADVICE r13 — the column name itself is validated '|'-free at
-    * write time by [[writeClustered]]). */
-  private def statLines(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith("%")).map(_.stripPrefix("%"))
-
-  /** On-disk manifest format this revision writes (`#format=2` header).
-    * Format 1 (headerless) ordered stats lines `col|file|min|max` and
-    * wrote DV addresses with URI-ESCAPED partition values; format 2
-    * reordered stats to `col|min|max|file` (so a '|' in a partition
-    * value cannot corrupt the parse) and stores DV addresses
-    * URI-decoded. A version marker makes the change explicit instead of
-    * silent (ADVICE r14): format-1 stats fall back to the old field
-    * order exactly (the header's absence IS the discriminator), and a
-    * format-1 manifest carrying DV lines is REFUSED loudly — its
-    * escaped addresses would silently stop matching the decoded scan
-    * addresses in escaped partitions, resurrecting deleted rows. */
-  private val FormatKey = "format"
-  private val CurrentFormat = 2
-
-  private def formatOf(meta: Map[String, String]): Int =
-    meta.get(FormatKey).flatMap(_.toIntOption).getOrElse(1)
-
-  /** Stats lines of `lines`, normalized to the CURRENT field order —
-    * format-1 manifests wrote `col|file|min|max`. */
-  private def normalizedStats(lines: Seq[String]): Seq[String] = {
-    val raw = statLines(lines)
-    if (formatOf(metaOf(lines)) >= 2) raw
-    else raw.map { s =>
-      val Array(c, f, mn, mx) = s.split("\\|", 4)
-      s"$c|$mn|$mx|$f"
-    }
-  }
-
-  /** Fail loudly on a format-1 manifest with deletion vectors — their
-    * URI-escaped addresses no longer match the decoded scan addresses,
-    * which would silently resurrect deleted rows in escaped partitions
-    * (ADVICE r14). Called on every path that resolves a manifest into
-    * a read or a diff. */
-  private def guardDvFormat(dir: String, lines: Seq[String]): Unit =
-    guardDvFormatMeta(dir, dvLines(lines), metaOf(lines))
-
-  private def guardDvFormatMeta(dir: String, dvs: Seq[String],
-      meta: Map[String, String]): Unit =
-    if (dvs.nonEmpty && formatOf(meta) < 2)
-      throw new IllegalStateException(
-        s"$dir: a pre-format-2 manifest carries deletion vectors whose " +
-          "row addresses were written URI-escaped; this revision reads " +
-          "addresses decoded, so the DVs would silently stop applying " +
-          "in escaped partitions. Rewrite the table (read the snapshot " +
-          "with the revision that wrote it, write() it fresh) before " +
-          "reading it here.")
-
-  /** Parse one stats line into (column, file, rawMin, rawMax). Raw
-    * values are either decimal longs (numeric stats) or `s:`-prefixed
-    * URL-encoded strings (string stats, [[mkStatStr]]) — the two
-    * classes share the '%' line format, so every commit path carries
-    * both without knowing which is which. Callers must hand lines
-    * already normalized to the current field order ([[normalizedStats]]
-    * — TableState.stats always is). */
-  private def parseStatRaw(line: String): (String, String, String, String) = {
-    val Array(c, mn, mx, f) = line.split("\\|", 4)
-    (c, f, mn, mx)
-  }
-
-  /** Numeric view of a stats line; None for string-stats lines (a
-    * numeric consumer treats files with only string stats as stat-less
-    * — conservatively scanned). */
-  private def parseStatNum(line: String): Option[(String, String, Long, Long)] = {
-    val (c, f, mn, mx) = parseStatRaw(line)
-    for (a <- mn.toLongOption; b <- mx.toLongOption) yield (c, f, a, b)
-  }
-
-  /** String view of a stats line; None for numeric lines. */
-  private def parseStatStr(line: String): Option[(String, String, String, String)] = {
-    val (c, f, mn, mx) = parseStatRaw(line)
-    for (a <- decStatStr(mn); b <- decStatStr(mx)) yield (c, f, a, b)
-  }
-
-  private def mkStat(col: String, file: String, mn: Long, mx: Long): String =
-    s"$col|$mn|$mx|$file"
-
-  /** String-stats value coding: `s:` marker + URL-encoding keeps the
-    * '|' line delimiter, newlines, and any other byte out of the
-    * manifest line, and the marker keeps a numeric-LOOKING string
-    * ("123") from ever being misread as a numeric stat. */
-  private val StrStatMark = "s:"
-  private def encStatStr(v: String): String =
-    StrStatMark + java.net.URLEncoder.encode(v, "UTF-8")
-  private def decStatStr(v: String): Option[String] =
-    if (v.startsWith(StrStatMark))
-      Some(java.net.URLDecoder.decode(v.stripPrefix(StrStatMark), "UTF-8"))
-    else None
-
-  private def mkStatStr(col: String, file: String, mn: String,
-      mx: String): String =
-    s"$col|${encStatStr(mn)}|${encStatStr(mx)}|$file"
-
-  /** Stats lines still valid after a commit keeps only `kept` data
-    * files (stats address immutable files, so validity IS presence). */
-  private def carriedStats(stats: Seq[String], kept: Seq[String]): Seq[String] = {
-    val keptSet = kept.toSet
-    stats.filter(s => keptSet.contains(parseStatRaw(s)._2))
-  }
-
   /** Latest committed (version, data-file relative paths); None if the
     * table has no committed snapshot yet. */
   def latest(spark: SparkSession, dir: String): Option[(Long, Seq[String])] =
@@ -711,51 +532,27 @@ object SnapshotTable {
       dir: String): Option[(Long, Seq[String], Seq[String])] =
     latestState(spark, dir).map(st => (st.version, st.files, st.dvs))
 
-  /** Everything a content-bearing commit must derive from: the latest
-    * snapshot's version, file/DV/stats lists, and its header map.
-    * `carried` is the subset of headers every subsequent commit must
-    * re-publish verbatim (currently the per-query `lastbatch.` replay
-    * markers) — dropping them would reopen the O(history) replay scan
-    * and, worse, let an ancient replay outside the lookback window
-    * double-apply. */
-  private final case class TableState(version: Long, files: Seq[String],
-      dvs: Seq[String], stats: Seq[String], meta: Map[String, String]) {
-    def carried: Map[String, String] =
-      meta.filter { case (k, _) => isCarriedHeader(k) }
-  }
-
   private def latestState(spark: SparkSession,
       dir: String): Option[TableState] = {
     val (fs, root) = fsFor(spark, dir)
     val mdir = new Path(root, ManifestDir)
     if (!fs.exists(mdir)) return None
-    val versions = fs.listStatus(mdir).toSeq
-      .flatMap(f => manifestVersion(f.getPath).map(_ -> f.getPath))
-    if (versions.isEmpty) None
-    else {
-      val (v, _) = versions.maxBy(_._1)
-      val st = stateAt(fs, root, dir, v)
-      guardDvFormatMeta(dir, st.dvs, st.meta)
-      Some(TableState(v, st.files, st.dvs, st.stats, st.meta))
-    }
+    fs.listStatus(mdir).toSeq.flatMap(f => Manifest.versionOf(f.getPath.getName))
+      .maxOption.map(v => stateAt(fs, root, v))
   }
 
-  /** EFFECTIVE full lines of version `v`'s manifest (headers + the
-    * complete data/DV/stats lists — delta manifests are reconstructed
-    * through [[stateAt]], full manifests return their raw lines
-    * untouched, preserving format-1 parse semantics); fails loudly when
-    * the manifest was vacuumed away (history that no longer exists
-    * cannot be read or diffed). */
-  private def manifestLinesAt(fs: FileSystem, root: Path, dir: String,
-      v: Long): Seq[String] = {
-    val p = new Path(new Path(root, ManifestDir), s"v$v.manifest")
+  /** State of committed version `v`, failing loudly when its manifest
+    * was vacuumed away (history that no longer exists cannot be read or
+    * diffed). Reads `v`'s own manifest first; a delta is then resolved
+    * through [[stateAt]]. */
+  private def committedState(fs: FileSystem, root: Path, dir: String,
+      v: Long): TableState = {
+    val p = manifestPathOf(new Path(root, ManifestDir), v)
     require(fs.exists(p), s"$dir has no snapshot v$v")
-    val raw = readManifest(fs, p)
-    if (!metaOf(raw).contains(BaseKey)) raw
-    else {
-      val st = stateAt(fs, root, dir, v)
-      st.meta.toSeq.sorted.map { case (k, value) => s"#$k=$value" } ++
-        st.files ++ st.dvs.map("~" + _) ++ st.stats.map("%" + _)
+    val m = readManifest(fs, p)
+    m.body match {
+      case Manifest.Full(s) => TableState(v, s, m.meta)
+      case _: Manifest.Delta => stateAt(fs, root, v)
     }
   }
 
@@ -764,20 +561,31 @@ object SnapshotTable {
     * index [[writeClustered]] builds and [[readRange]] prunes with. */
   def fileStats(spark: SparkSession, dir: String,
       statsCol: String): Map[String, (Long, Long)] =
-    latestState(spark, dir).map(_.stats).getOrElse(Seq.empty)
-      .flatMap(parseStatNum).collect {
-        case (c, f, mn, mx) if c == statsCol => f -> (mn, mx)
-      }.toMap
+    latestState(spark, dir).map(longRanges(_, statsCol)).getOrElse(Map.empty)
 
   /** Per-file lexicographic min/max STRING stats of `statsCol` in the
     * latest snapshot — [[fileStats]]' sibling for string columns
     * ([[readRangeString]] prunes with these). */
   def fileStatsStr(spark: SparkSession, dir: String,
       statsCol: String): Map[String, (String, String)] =
-    latestState(spark, dir).map(_.stats).getOrElse(Seq.empty)
-      .flatMap(parseStatStr).collect {
-        case (c, f, mn, mx) if c == statsCol => f -> (mn, mx)
-      }.toMap
+    latestState(spark, dir).map(stringRanges(_, statsCol)).getOrElse(Map.empty)
+
+  /** Numeric (file → (min, max)) of `statsCol`; string-stats files are
+    * absent (a numeric reader scans them conservatively). */
+  private def longRanges(st: TableState,
+      statsCol: String): Map[String, (Long, Long)] =
+    st.stats.collect {
+      case Manifest.FileStat(c, f, Manifest.LongStat(mn), Manifest.LongStat(mx))
+          if c == statsCol => f -> (mn, mx)
+    }.toMap
+
+  /** String (file → (min, max)) of `statsCol`; numeric stats are absent. */
+  private def stringRanges(st: TableState,
+      statsCol: String): Map[String, (String, String)] =
+    st.stats.collect {
+      case Manifest.FileStat(c, f, Manifest.StringStat(mn), Manifest.StringStat(mx))
+          if c == statsCol => f -> (mn, mx)
+    }.toMap
 
   /** Read snapshot `version` (default: latest). The returned frame is
     * bound to that snapshot's exact file list — concurrent commits and
@@ -829,9 +637,8 @@ object SnapshotTable {
           .getOrElse(sys.error(s"$dir has no committed snapshot"))
         (fls, dv)
       case Some(v) =>
-        val lines = manifestLinesAt(fs, root, dir, v)
-        guardDvFormat(dir, lines)
-        (dataLines(lines), dvLines(lines))
+        val st = committedState(fs, root, dir, v)
+        (st.files, st.dvs)
     }
     val files = restrictTo match {
       case Some(keep) => allFiles.filter(keep)
@@ -868,22 +675,18 @@ object SnapshotTable {
   }
 
   /** Commit history, newest first: (version, commit epoch millis, meta
-    * headers) — the DESCRIBE HISTORY surface. Manifests written before
-    * timestamps were stamped fall back to the manifest file's mtime. */
+    * headers) — the DESCRIBE HISTORY surface. Every commit stamps `ts`
+    * ([[writeManifest]]). */
   def history(spark: SparkSession, dir: String): Seq[(Long, Long, Map[String, String])] = {
     val (fs, root) = fsFor(spark, dir)
     val mdir = new Path(root, ManifestDir)
     if (!fs.exists(mdir)) return Seq.empty
     fs.listStatus(mdir).toSeq
-      .flatMap(f => manifestVersion(f.getPath).map(v => (v, f)))
+      .flatMap(f => Manifest.versionOf(f.getPath.getName).map(v => (v, f)))
       .sortBy(-_._1)
       .map { case (v, f) =>
-        // BaseKey is delta-encoding plumbing, not commit metadata —
-        // history's meta maps stay shaped as before delta manifests
-        val meta = metaOf(readManifest(fs, f.getPath)) - BaseKey
-        val ts = meta.get("ts").flatMap(_.toLongOption)
-          .getOrElse(f.getModificationTime)
-        (v, ts, meta)
+        val meta = readManifest(fs, f.getPath).meta
+        (v, meta("ts").toLong, meta)
       }
   }
 
@@ -923,8 +726,8 @@ object SnapshotTable {
   def readAppendsSinceVersioned(spark: SparkSession, dir: String,
       sinceVersion: Long): Option[(Long, DataFrame)] = {
     val (fs, root) = fsFor(spark, dir)
-    val sinceLines = manifestLinesAt(fs, root, dir, sinceVersion)
-    val before = dataLines(sinceLines).toSet
+    val since = committedState(fs, root, dir, sinceVersion)
+    val before = since.files.toSet
     val st = latestState(spark, dir)
       .getOrElse(sys.error(s"$dir has no committed snapshot"))
     val (nowV, now, nowDvs) = (st.version, st.files, st.dvs)
@@ -946,7 +749,7 @@ object SnapshotTable {
     // data file), so an incremental maintainer fed only "fresh files"
     // would silently keep rows a DV deleted — fail loudly instead of
     // going stale
-    if (dvLines(sinceLines).toSet != nowDvs.toSet)
+    if (since.dvs.toSet != nowDvs.toSet)
       throw new IllegalStateException(
         s"$dir: the deletion-vector set changed between v$sinceVersion " +
           s"and v$nowV — append-diff reading cannot represent row " +
@@ -1056,11 +859,11 @@ object SnapshotTable {
     var runStart = fromVersion
     var prev = fromVersion
     ((fromVersion + 1) to toVersion).foreach { v =>
-      // header-only question — read the raw manifest (headers are
+      // header-only question — read the manifest itself (headers are
       // complete in every manifest, delta or full; no reconstruction)
       val p = manifestPathOf(new Path(root, ManifestDir), v)
       require(fs.exists(p), s"$dir has no snapshot v$v")
-      val reorg = metaOf(readManifest(fs, p))
+      val reorg = readManifest(fs, p).meta
         .get(DataChangeKey).contains("false")
       if (reorg) {
         if (prev > runStart) segs += ((runStart, prev))
@@ -1081,13 +884,11 @@ object SnapshotTable {
     import spark.implicits._
     val (fs, root) = fsFor(spark, dir)
     val sinceVersion = fromVersion
-    val sinceLines = manifestLinesAt(fs, root, dir, fromVersion)
-    val toLines = manifestLinesAt(fs, root, dir, toVersion)
-    guardDvFormat(dir, sinceLines)
-    guardDvFormat(dir, toLines)
-    val toFiles = dataLines(toLines)
-    val toDvs = dvLines(toLines)
-    val before = dataLines(sinceLines)
+    val since = committedState(fs, root, dir, fromVersion)
+    val to = committedState(fs, root, dir, toVersion)
+    val toFiles = to.files
+    val toDvs = to.dvs
+    val before = since.files
     val beforeSet = before.toSet
     val nowSet = toFiles.toSet
     val removed = before.filterNot(nowSet.contains)
@@ -1098,7 +899,7 @@ object SnapshotTable {
         Seq.empty[(String, Long)].toDF(FileCol, PosCol)
       else spark.read.parquet(rels.map(f => new Path(root, f).toString): _*)
         .select(col("file").as(FileCol), col("pos").as(PosCol))
-    val sinceDvRels = dvLines(sinceLines)
+    val sinceDvRels = since.dvs
     val sdv = dvAddrs(sinceDvRels)
     val ndv = dvAddrs(toDvs)
     // un-deletes: a DV row present at `since` over a CARRIED file but
@@ -1205,8 +1006,8 @@ object SnapshotTable {
       s"tableChanges needs fromVersion < toVersion ($fromVersion, $toVersion)")
     val (fs, root) = fsFor(spark, dir)
     val steps = (fromVersion until toVersion).flatMap { v =>
-      val toLines = manifestLinesAt(fs, root, dir, v + 1)
-      if (metaOf(toLines).get(DataChangeKey).contains("false")) None
+      if (committedState(fs, root, dir, v + 1).meta.get(DataChangeKey)
+          .contains("false")) None
       else {
         val (ins, del) = changesBetween(spark, dir, v, v + 1)
         Some(ins.withColumn(ChangeTypeCol, lit("insert"))
@@ -1335,20 +1136,17 @@ object SnapshotTable {
     * silently lost (ADVICE r13). 0 when no vacuum has run. */
   private def lowWatermark(fs: FileSystem, mdir: Path): Long =
     if (!fs.exists(mdir)) 0L
-    else fs.listStatus(mdir).toSeq.flatMap { f =>
-      val n = f.getPath.getName
-      if (n.startsWith("low.v") && n.endsWith(".watermark"))
-        n.stripPrefix("low.v").stripSuffix(".watermark").toLongOption
-      else None
-    }.maxOption.getOrElse(0L)
+    else fs.listStatus(mdir).toSeq
+      .flatMap(f => Manifest.watermarkOf(f.getPath.getName))
+      .maxOption.getOrElse(0L)
 
-  /** Serialize (`#k=v` headers + file list) and atomically publish the
-    * manifest for version `v`; true iff THIS writer won the version.
-    * The single serialization path for [[commit]] and [[writeIf]] —
-    * every commit stamps its wall-clock millis INSIDE the manifest (the
-    * readAsOf timestamp-travel anchor), atomic with the file list, so
-    * there is no window where data is committed but its metadata is
-    * not. The loser's tmp file is cleaned up here.
+  /** Encode and atomically publish the manifest for version `v`; true
+    * iff THIS writer won the version. The single serialization path
+    * for [[commitAt]] and [[writeIf]] — every commit stamps its
+    * wall-clock millis INSIDE the manifest (the readAsOf
+    * timestamp-travel anchor), atomic with the content, so there is no
+    * window where data is committed but its metadata is not. The
+    * loser's tmp file is cleaned up here.
     *
     * After a successful publish the writer re-reads the vacuum
     * watermark and RETRACTS a manifest below it: vacuum publishes the
@@ -1357,59 +1155,38 @@ object SnapshotTable {
     * un-publishes itself — the stale writer's loop then re-reads the
     * true latest and re-derives, exactly as for a plain CAS loss. */
   private def writeManifest(fs: FileSystem, mdir: Path, v: Long,
-      files: Seq[String], meta: Map[String, String],
-      dvs: Seq[String] = Seq.empty,
-      stats: Seq[String] = Seq.empty): Boolean = {
+      snap: Manifest.Snapshot, meta: Map[String, String]): Boolean = {
     fs.mkdirs(mdir)
     val stamped = meta + ("ts" -> System.currentTimeMillis().toString) +
-      (FormatKey -> CurrentFormat.toString)
-    // DELTA body when the new lists are reachable from the previous
-    // version's state as (carry.filterNot(removed) ++ appended) — the
-    // shape every verb builds; anything else (restore's reorders, an
+      (Manifest.FormatKey -> Manifest.CurrentFormat)
+    // DELTA body when the new content is reachable from the previous
+    // version's as (carry.filterNot(removed) ++ appended) — the shape
+    // every verb builds; anything else (restore's reorders, an
     // unavailable/vacuumed prev state) publishes a FULL manifest, so
     // the delta encoding is an optimization the correctness of which is
     // verified per commit, never assumed (r17, VERDICT r16 #1).
-    val prevOpt: Option[SnapState] =
+    val prevOpt: Option[TableState] =
       if (v <= 1L) None
       else {
         val pkey = manifestCacheKey(fs, manifestPathOf(mdir, v - 1))
         Option(stateCache.get(pkey)).orElse {
           try {
             if (fs.exists(manifestPathOf(mdir, v - 1)))
-              Some(stateAt(fs, mdir.getParent, mdir.getParent.toString, v - 1))
+              Some(stateAt(fs, mdir.getParent, v - 1))
             else None
           } catch { case scala.util.control.NonFatal(_) => None }
         }
       }
-    def deltaOf(prev: Seq[String],
-        now: Seq[String]): Option[(Seq[String], Seq[String])] = {
-      val prevSet = prev.toSet; val nowSet = now.toSet
-      val removed = prev.filterNot(nowSet.contains)
-      val added = now.filterNot(prevSet.contains)
-      val rs = removed.toSet
-      if ((prev.filterNot(rs.contains) ++ added) == now) Some((removed, added))
-      else None
-    }
-    val deltaBody: Option[Seq[String]] = prevOpt.flatMap { p =>
-      for {
-        fd <- deltaOf(p.files, files)
-        dd <- deltaOf(p.dvs, dvs)
-        sd <- deltaOf(p.stats, stats)
-      } yield fd._1.map("-" + _) ++ fd._2.map("+" + _) ++
-        dd._1.map(x => "-~" + x) ++ dd._2.map(x => "+~" + x) ++
-        sd._1.map(x => "-%" + x) ++ sd._2.map(x => "+%" + x)
-    }
-    val headerMap =
-      deltaBody.fold(stamped)(_ => stamped + (BaseKey -> (v - 1).toString))
-    val header = headerMap.toSeq.sorted.map { case (k, value) => s"#$k=$value" }
-    val body =
-      deltaBody.getOrElse(files ++ dvs.map("~" + _) ++ stats.map("%" + _))
-    val tmp = new Path(mdir,
-      s".v$v.manifest.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val body = prevOpt.flatMap(p => snap.deltaFrom(p.snap))
+      .fold[Manifest.Body](Manifest.Full(snap)) { case (removed, added) =>
+        Manifest.Delta(v - 1, removed, added)
+      }
+    val manifest = Manifest(stamped, body)
+    val dest = manifestPathOf(mdir, v)
+    val tmp = new Path(mdir, Manifest.tmpFile(dest.getName))
     val out = fs.create(tmp, true)
-    try out.write(((header ++ body).mkString("\n") + "\n").getBytes("UTF-8"))
+    try out.write(Manifest.encode(manifest))
     finally out.close()
-    val dest = new Path(mdir, s"v$v.manifest")
     val destKey = manifestCacheKey(fs, dest)
     if (!publishIfAbsent(fs, tmp, dest)) { fs.delete(tmp, false); false }
     else if (v < lowWatermark(fs, mdir)) {
@@ -1418,16 +1195,16 @@ object SnapshotTable {
       // remove-delete-remove (ADVICE r16): a concurrent reader racing
       // the retract can re-seed the caches between the first remove and
       // the delete, leaving stale entries for a dead path.
-      manifestLinesCache.remove(destKey); stateCache.remove(destKey)
+      manifestCache.remove(destKey); stateCache.remove(destKey)
       fs.delete(dest, false)
-      manifestLinesCache.remove(destKey); stateCache.remove(destKey)
+      manifestCache.remove(destKey); stateCache.remove(destKey)
       false
     } else {
       // this writer's commit will be re-read immediately by its own
       // post-commit bookkeeping — seed both caches from memory
-      manifestLinesCache.put(destKey, header ++ body)
-      stateCache.put(destKey, SnapState(files, dvs, stats, stamped))
-      bounded(manifestLinesCache); bounded(stateCache)
+      manifestCache.put(destKey, manifest)
+      stateCache.put(destKey, TableState(v, snap, stamped))
+      bounded(manifestCache); bounded(stateCache)
       // checkpoint cadence: a file-count-sized write every N commits
       // (amortized ~files/N per commit) keeps every other commit and
       // every reconstruction delta-sized. Never fails the commit — the
@@ -1435,7 +1212,7 @@ object SnapshotTable {
       // full-manifest walk without it.
       val interval = checkpointInterval
       if (interval > 0 && v % interval == 0)
-        try writeCkpt(fs, mdir, v, files, dvs, stats)
+        try writeCkpt(fs, mdir, v, snap)
         catch {
           case scala.util.control.NonFatal(e) => System.err.println(
             s"[graft.SnapshotTable] WARN: checkpoint at v$v failed: " +
@@ -1445,21 +1222,19 @@ object SnapshotTable {
     }
   }
 
-  /** Single-shot CAS commit at version `expectedPrev + 1`; true iff
-    * this writer won. The building block of every read-derive-commit
-    * loop below: a mutation that lost the race must RE-DERIVE against
-    * the winner's state (and re-enforce its constraints), or its stale
-    * carried file/DV/stats lists silently drop the winner's commit
-    * (the classic optimistic-concurrency lost update). Carried replay
-    * markers survive even a full content replace (the Delta txn-appId
-    * contract): dropping them would let an ancient batch replay
-    * double-apply after an overwrite. */
+  /** Single-shot CAS commit of `snap` at version `expectedPrev + 1`;
+    * true iff this writer won. The building block of every
+    * read-derive-commit loop below: a mutation that lost the race must
+    * RE-DERIVE against the winner's state (and re-enforce its
+    * constraints), or its stale carried file/DV/stats lists silently
+    * drop the winner's commit (the classic optimistic-concurrency lost
+    * update). Carried replay markers survive even a full content
+    * replace (the Delta txn-appId contract): dropping them would let an
+    * ancient batch replay double-apply after an overwrite. */
   private[sources] def commitAt(spark: SparkSession, dir: String, expectedPrev: Long,
-      files: Seq[String], meta: Map[String, String],
-      dvs: Seq[String] = Seq.empty, stats: Seq[String] = Seq.empty): Boolean = {
+      snap: Manifest.Snapshot, meta: Map[String, String]): Boolean = {
     val (fs, root) = fsFor(spark, dir)
-    writeManifest(fs, new Path(root, ManifestDir), expectedPrev + 1,
-      files, meta, dvs, stats)
+    writeManifest(fs, new Path(root, ManifestDir), expectedPrev + 1, snap, meta)
   }
 
   /** date_format patterns of the supported partition transforms; each
@@ -1573,8 +1348,8 @@ object SnapshotTable {
         .getOrElse(sys.error(s"$dir has no committed snapshot"))
       val (_, fn) = transformOf(spark, dir)
       if (fn == newTransform) return st.version
-      if (commitAt(spark, dir, st.version, st.files,
-          st.carried + (TransformFnKey -> newTransform), st.dvs, st.stats))
+      if (commitAt(spark, dir, st.version, st.snap,
+          st.carried + (TransformFnKey -> newTransform)))
         return st.version + 1
       attempt += 1
     }
@@ -1699,8 +1474,7 @@ object SnapshotTable {
             .select("file", "sketch"))
       }
       val rel = stageBloomSidecar(spark, dir, combined)
-      if (commitAt(spark, dir, st.version, st.files,
-          st.carried + (key -> rel), st.dvs, st.stats))
+      if (commitAt(spark, dir, st.version, st.snap, st.carried + (key -> rel)))
         return st.version + 1
       dropSidecarDir(spark, dir, rel)
       attempt += 1
@@ -1789,12 +1563,7 @@ object SnapshotTable {
             expr("bloom_probe(sketch, __probe)"))
           .select("file").collect().map(_.getString(0)).toSeq
     }
-    val residual = col(column) === lit(value)
-    val frame =
-      if (live.isEmpty) read(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, st.files.size)
+    prunedRead(spark, dir, st, live, col(column) === lit(value))
   }
 
   /** `column`'s stored type, resolved from ONE file's footer (cheap at
@@ -1811,7 +1580,7 @@ object SnapshotTable {
   //
   // The Iceberg WAP pattern, reduced to this substrate: a batch stages
   // its data files plus an UNPUBLISHED `branch.<name>.manifest` (never
-  // resolved by readers — manifestVersion() ignores it); auditors read
+  // resolved by readers — Manifest.versionOf ignores it); auditors read
   // base ∪ staged; publish appends the staged files to the CURRENT
   // snapshot in one CAS commit that also plants the branch's
   // exactly-once marker (the `lastbatch.` carried-header machinery the
@@ -1826,7 +1595,7 @@ object SnapshotTable {
   // constraint pass over the staged rows. Nothing is ever rewritten.
 
   private def branchPath(mdir: Path, branch: String): Path =
-    new Path(mdir, s"branch.$branch.manifest")
+    new Path(mdir, Manifest.branchFile(branch))
 
   private def branchQueryId(branch: String): String = "wap." + branch
 
@@ -1854,11 +1623,11 @@ object SnapshotTable {
     require(!fs.exists(branchPath(mdir, branch)),
       s"$dir already has a staged branch '$branch'")
     val staged = stage(spark, dir, df, partCol)
-    val tmp = new Path(mdir,
-      s".branch.$branch.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val tmp = new Path(mdir, Manifest.tmpFile(Manifest.branchFile(branch)))
     val out = fs.create(tmp, true)
-    try out.write((s"#${FormatKey}=$CurrentFormat\n" +
-      staged.mkString("\n") + "\n").getBytes("UTF-8"))
+    try out.write(Manifest.encode(Manifest(
+      Map(Manifest.FormatKey -> Manifest.CurrentFormat),
+      Manifest.Full(Manifest.Snapshot(staged)))))
     finally out.close()
     if (!publishIfAbsent(fs, tmp, branchPath(mdir, branch))) {
       fs.delete(tmp, false)
@@ -1875,7 +1644,7 @@ object SnapshotTable {
     val (fs, root) = fsFor(spark, dir)
     val bp = branchPath(new Path(root, ManifestDir), branch)
     require(fs.exists(bp), s"$dir has no staged branch '$branch'")
-    val staged = dataLines(readManifest(fs, bp))
+    val staged = readManifest(fs, bp).snapshot.files
     val stagedRows = readFiles(spark, dir, fs, root, staged)
     if (stagedOnly) stagedRows
     else read(spark, dir).unionByName(stagedRows, allowMissingColumns = true)
@@ -1897,13 +1666,13 @@ object SnapshotTable {
     val qid = branchQueryId(branch)
     def published(st: Option[TableState]): Option[Long] =
       st.flatMap(_.meta.get(LastBatchPrefix + qid))
-        .map(_.split(":", 2)(1).toLong)
+        .map(v => Manifest.parseLastBatch(v)._2)
     published(latestState(spark, dir)).foreach { v =>
       if (fs.exists(bp)) fs.delete(bp, false) // crashed pre-delete rerun
       return v
     }
     require(fs.exists(bp), s"$dir has no staged branch '$branch'")
-    val staged = dataLines(readManifest(fs, bp))
+    val staged = readManifest(fs, bp).snapshot.files
     val stagedRows = readFiles(spark, dir, fs, root, staged)
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
@@ -1913,9 +1682,10 @@ object SnapshotTable {
       }
       val st = stOpt.getOrElse(sys.error(s"$dir has no committed snapshot"))
       enforce(st.meta, stagedRows, s"publish branch '$branch'")
-      if (commitAt(spark, dir, st.version, st.files ++ staged,
-          st.carried ++ batchMeta(qid, 0L, st.version) + ("wap" -> branch),
-          st.dvs, st.stats ++ ingestStats(spark, dir, staged, st.meta))) {
+      if (commitAt(spark, dir, st.version,
+          st.snap.plus(files = staged,
+            stats = ingestStats(spark, dir, staged, st.meta)),
+          st.carried ++ batchMeta(qid, 0L, st.version) + ("wap" -> branch))) {
         fs.delete(bp, false)
         return st.version + 1
       }
@@ -1932,7 +1702,7 @@ object SnapshotTable {
     val (fs, root) = fsFor(spark, dir)
     val bp = branchPath(new Path(root, ManifestDir), branch)
     if (!fs.exists(bp)) return
-    dropStaged(spark, dir, dataLines(readManifest(fs, bp)))
+    dropStaged(spark, dir, readManifest(fs, bp).snapshot.files)
     fs.delete(bp, false): Unit
   }
 
@@ -2003,8 +1773,8 @@ object SnapshotTable {
         s"$dir already has a constraint named '$name'")
       enforce(Map(key -> predicate), read(spark, dir, Some(st.version)),
         s"ADD CONSTRAINT '$name' on existing rows")
-      if (commitAt(spark, dir, st.version, st.files,
-          st.carried + (key -> predicate), st.dvs, st.stats))
+      if (commitAt(spark, dir, st.version, st.snap,
+          st.carried + (key -> predicate)))
         return st.version + 1
       attempt += 1
     }
@@ -2020,8 +1790,7 @@ object SnapshotTable {
       val st = latestState(spark, dir)
         .getOrElse(sys.error(s"$dir has no committed snapshot"))
       if (!st.meta.contains(key)) return st.version
-      if (commitAt(spark, dir, st.version, st.files, st.carried - key,
-          st.dvs, st.stats))
+      if (commitAt(spark, dir, st.version, st.snap, st.carried - key))
         return st.version + 1
       attempt += 1
     }
@@ -2032,8 +1801,7 @@ object SnapshotTable {
     * none — the default, in which [[ingestStats]] is a zero-cost
     * no-op on every commit path). */
   private def statsColsOf(meta: Map[String, String]): Seq[String] =
-    meta.get(StatsColsKey).map(_.split(',').toSeq.filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
+    meta.get(StatsColsKey).map(Manifest.parseStatsCols).getOrElse(Seq.empty)
 
   /** The table's registered data-skipping columns ([[setStatsColumns]];
     * empty when none are registered). */
@@ -2075,9 +1843,8 @@ object SnapshotTable {
       if (statsColsOf(st.meta) == distinct) return st.version
       val carried =
         if (distinct.isEmpty) st.carried - StatsColsKey
-        else st.carried + (StatsColsKey -> distinct.mkString(","))
-      if (commitAt(spark, dir, st.version, st.files, carried, st.dvs,
-          st.stats))
+        else st.carried + (StatsColsKey -> Manifest.statsCols(distinct))
+      if (commitAt(spark, dir, st.version, st.snap, carried))
         return st.version + 1
       attempt += 1
     }
@@ -2095,7 +1862,7 @@ object SnapshotTable {
     * when nothing is registered. */
   private def ingestStats(spark: SparkSession, dir: String,
       newFiles: Seq[String], meta: Map[String, String],
-      already: Seq[String] = Seq.empty): Seq[String] =
+      already: Seq[String] = Seq.empty): Seq[Manifest.FileStat] =
     computeStatsMulti(spark, dir, newFiles,
       statsColsOf(meta).filterNot(already.contains))
 
@@ -2140,9 +1907,9 @@ object SnapshotTable {
         dropStaged(spark, dir, staged); throw e
       }
       val v = st.map(_.version).getOrElse(0L)
-      if (commitAt(spark, dir, v, staged,
-          st.map(_.carried).getOrElse(Map.empty) ++ meta, Seq.empty,
-          statsFor(st.map(_.meta).getOrElse(Map.empty) ++ meta, Seq.empty)))
+      if (commitAt(spark, dir, v, Manifest.Snapshot(staged, stats =
+            statsFor(st.map(_.meta).getOrElse(Map.empty) ++ meta, Seq.empty)),
+          st.map(_.carried).getOrElse(Map.empty) ++ meta))
         return v + 1
       attempt += 1
     }
@@ -2158,9 +1925,10 @@ object SnapshotTable {
     * MaxCommitAttempts times under contention for an identical result
     * (ADVICE r15). */
   private def memoStats(spark: SparkSession, dir: String,
-      staged: Seq[String]): (Map[String, String], Seq[String]) => Seq[String] = {
+      staged: Seq[String])
+      : (Map[String, String], Seq[String]) => Seq[Manifest.FileStat] = {
     var key: Option[Seq[String]] = None
-    var cached: Seq[String] = Seq.empty
+    var cached: Seq[Manifest.FileStat] = Seq.empty
     (meta: Map[String, String], already: Seq[String]) => {
       val cols = statsColsOf(meta).filterNot(already.contains)
       if (!key.contains(cols)) {
@@ -2175,7 +1943,7 @@ object SnapshotTable {
     * per-file min/max data-skipping index: rows are range-partitioned
     * on the column before staging, so files carry near-disjoint value
     * ranges, and one column-pruned pass over the staged files collects
-    * each file's (min, max) into '%'-prefixed manifest lines — the
+    * each file's (min, max) into manifest stats entries — the
     * public Delta/Iceberg file-stats idea reduced to its minimum, and
     * the third pruning leg next to hive partition dirs and the Z-order
     * bucket IN-list (`Layouts.writeZOrdered`). `statsCol` must be
@@ -2191,8 +1959,7 @@ object SnapshotTable {
     * separate stats store to keep consistent. */
   def writeClustered(spark: SparkSession, dir: String, df: DataFrame,
       partCol: String, statsCol: String, rangeParts: Int = 0): Long = {
-    require(!statsCol.contains("|"),
-      s"stats column name '$statsCol' contains the stats-line delimiter '|'")
+    Manifest.requireStatsColumn(statsCol)
     // rangeParts = 0 (default) derives the slice count from the corpus:
     // max(16, ceil(n / spark.graft.cluster.targetSliceRows)) — the knob
     // rule every tiered operator here follows (a CONSTANT slice count is
@@ -2224,10 +1991,9 @@ object SnapshotTable {
         dropStaged(spark, dir, files); throw e
       }
       val v = st.map(_.version).getOrElse(0L)
-      if (commitAt(spark, dir, v, files,
-          st.map(_.carried).getOrElse(Map.empty), Seq.empty,
-          stats ++ statsFor(st.map(_.meta).getOrElse(Map.empty),
-            Seq(statsCol))))
+      if (commitAt(spark, dir, v, Manifest.Snapshot(files, stats = stats ++
+            statsFor(st.map(_.meta).getOrElse(Map.empty), Seq(statsCol))),
+          st.map(_.carried).getOrElse(Map.empty)))
         return v + 1
       attempt += 1
     }
@@ -2236,25 +2002,25 @@ object SnapshotTable {
   }
 
   /** One distributed, column-pruned pass over `files` collecting each
-    * file's (min, max) of `statsCol` as stats lines. A file whose stats
+    * file's (min, max) of `statsCol` as stats entries. A file whose stats
     * column is entirely null gets NO line (null min/max would NPE the
     * collect and mean nothing for pruning — ADVICE r13); [[readRange]]
     * conservatively keeps stat-less files, so correctness is unchanged. */
   private def computeStats(spark: SparkSession, dir: String,
-      files: Seq[String], statsCol: String): Seq[String] =
+      files: Seq[String], statsCol: String): Seq[Manifest.FileStat] =
     computeStatsMulti(spark, dir, files, Seq(statsCol))
 
   /** [[computeStats]] for SEVERAL columns in one column-pruned pass
     * (one scan regardless of column count — the shape
     * [[setStatsColumns]]' per-commit hook needs). TYPE-AWARE: a string
-    * column gets lexicographic min/max string stats ([[mkStatStr]],
-    * pruned by [[readRangeString]]); everything else casts to long
-    * ([[mkStat]], pruned by [[readRange]]) — the repo-wide exact-
+    * column gets lexicographic min/max string stats (pruned by
+    * [[readRangeString]]); everything else casts to long (pruned by
+    * [[readRange]]) — the repo-wide exact-
     * arithmetic rule. Columns absent from the scanned files' schema,
     * or entirely null / non-castable within a file, contribute no
     * line for that file. */
   private def computeStatsMulti(spark: SparkSession, dir: String,
-      files: Seq[String], cols: Seq[String]): Seq[String] = {
+      files: Seq[String], cols: Seq[String]): Seq[Manifest.FileStat] = {
     if (files.isEmpty || cols.isEmpty) return Seq.empty
     val (_, root) = fsFor(spark, dir)
     val scan = spark.read.option("basePath", dir)
@@ -2273,9 +2039,11 @@ object SnapshotTable {
         val f = r.getString(0)
         present.zipWithIndex.collect {
           case (c, i) if !r.isNullAt(1 + 2 * i) =>
-            if (isStr(c))
-              mkStatStr(c, f, r.getString(1 + 2 * i), r.getString(2 + 2 * i))
-            else mkStat(c, f, r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))
+            if (isStr(c)) Manifest.FileStat(c, f,
+              Manifest.StringStat(r.getString(1 + 2 * i)),
+              Manifest.StringStat(r.getString(2 + 2 * i)))
+            else Manifest.FileStat(c, f, Manifest.LongStat(r.getLong(1 + 2 * i)),
+              Manifest.LongStat(r.getLong(2 + 2 * i)))
         }
       }
   }
@@ -2298,21 +2066,24 @@ object SnapshotTable {
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val st = latestState(spark, dir)
       .getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val (v, files, stats) = (st.version, st.files, st.stats)
-    val ranges = stats.flatMap(parseStatNum)
-      .collect { case (c, f, mn, mx) if c == statsCol => f -> (mn, mx) }
-      .toMap
-    val live = files.filter(f => ranges.get(f) match {
+    val ranges = longRanges(st, statsCol)
+    val live = st.files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None => true // no stats for this file: must scan it
     })
-    val residual = col(statsCol).cast("long").between(lo, hi)
+    prunedRead(spark, dir, st, live, col(statsCol).cast("long").between(lo, hi))
+  }
+
+  /** (frame, files kept, files total) of snapshot `st` restricted to the
+    * `live` files with `residual` applied — a schema-stable empty
+    * relation (zero IO) when nothing is live. */
+  private def prunedRead(spark: SparkSession, dir: String, st: TableState,
+      live: Seq[String], residual: Column): (DataFrame, Int, Int) = {
     val frame =
-      if (live.isEmpty) // schema-stable empty relation, zero IO
-        read(spark, dir, Some(v)).filter(lit(false))
-      else readResolved(spark, dir, Some(v), withLineage = false,
+      if (live.isEmpty) read(spark, dir, Some(st.version)).filter(lit(false))
+      else readResolved(spark, dir, Some(st.version), withLineage = false,
         restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, files.size)
+    (frame, live.size, st.files.size)
   }
 
   /** Driver-side string comparison in Spark's OWN order (UTF8String —
@@ -2340,20 +2111,12 @@ object SnapshotTable {
       lo: String, hi: String): (DataFrame, Int, Int) = {
     val st = latestState(spark, dir)
       .getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val ranges = st.stats.flatMap(parseStatStr)
-      .collect { case (c, f, mn, mx) if c == statsCol => f -> (mn, mx) }
-      .toMap
+    val ranges = stringRanges(st, statsCol)
     val live = st.files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) => utf8Cmp(lo, mx) <= 0 && utf8Cmp(mn, hi) <= 0
       case None => true // no stats for this file: must scan it
     })
-    val residual = col(statsCol).between(lit(lo), lit(hi))
-    val frame =
-      if (live.isEmpty)
-        read(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, st.files.size)
+    prunedRead(spark, dir, st, live, col(statsCol).between(lit(lo), lit(hi)))
   }
 
   /** Prefix read on a STRING column through the string-stats index:
@@ -2370,9 +2133,7 @@ object SnapshotTable {
       prefix: String): (DataFrame, Int, Int) = {
     val st = latestState(spark, dir)
       .getOrElse(sys.error(s"$dir has no committed snapshot"))
-    val ranges = st.stats.flatMap(parseStatStr)
-      .collect { case (c, f, mn, mx) if c == statsCol => f -> (mn, mx) }
-      .toMap
+    val ranges = stringRanges(st, statsCol)
     val live = st.files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) =>
         val allBelow = utf8Cmp(mx, prefix) < 0
@@ -2380,13 +2141,7 @@ object SnapshotTable {
         !allBelow && !allAbove
       case None => true
     })
-    val residual = col(statsCol).startsWith(prefix)
-    val frame =
-      if (live.isEmpty)
-        read(spark, dir, Some(st.version)).filter(lit(false))
-      else readResolved(spark, dir, Some(st.version), withLineage = false,
-        restrictTo = Some(live.toSet)).filter(residual)
-    (frame, live.size, st.files.size)
+    prunedRead(spark, dir, st, live, col(statsCol).startsWith(prefix))
   }
 
   /** Snapshot read restricted to the given partition VALUES of
@@ -2408,7 +2163,7 @@ object SnapshotTable {
       if (v == st.version) st.files
       else {
         val (fs, root) = fsFor(spark, dir)
-        dataLines(manifestLinesAt(fs, root, dir, v))
+        committedState(fs, root, dir, v).files
       }
     val dirs = values.map(x => partDirOf(partCol, x)).toSet
     val live = files.filter(f => dirs.contains(f.split('/').head))
@@ -2440,9 +2195,9 @@ object SnapshotTable {
     val (fs, root) = fsFor(spark, dir)
     val mdir = new Path(root, ManifestDir)
     val v = expectedPrev + 1
-    if (writeManifest(fs, mdir, v, files, carried ++ meta, Seq.empty,
-        ingestStats(spark, dir, files,
-          st.map(_.meta).getOrElse(Map.empty) ++ meta))) Some(v)
+    if (writeManifest(fs, mdir, v, Manifest.Snapshot(files, stats =
+          ingestStats(spark, dir, files, st.map(_.meta).getOrElse(Map.empty) ++ meta)),
+        carried ++ meta)) Some(v)
     else {
       // lost the race: drop the staged files — they were never
       // referenced by any committed manifest (tmp cleanup happened
@@ -2464,13 +2219,13 @@ object SnapshotTable {
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       val st = latestState(spark, dir)
-        .getOrElse(TableState(0L, Seq.empty, Seq.empty, Seq.empty, Map.empty))
+        .getOrElse(EmptyState)
       try enforce(st.meta, df, "append")
       catch { case e: ConstraintViolationException =>
         dropStaged(spark, dir, staged); throw e
       }
-      if (commitAt(spark, dir, st.version, st.files ++ staged, st.carried,
-          st.dvs, st.stats ++ ingestStats(spark, dir, staged, st.meta)))
+      if (commitAt(spark, dir, st.version, st.snap.plus(files = staged,
+            stats = ingestStats(spark, dir, staged, st.meta)), st.carried))
         return st.version + 1
       attempt += 1
     }
@@ -2506,9 +2261,9 @@ object SnapshotTable {
       // DV rows over rewritten files address files no longer in the
       // manifest — harmless no-ops at read; rows over kept files must
       // keep applying, so the DV set carries over whole
-      if (commitAt(spark, dir, base, keptFiles ++ newFiles, st.carried, st.dvs,
-          carriedStats(st.stats, keptFiles) ++
-            ingestStats(spark, dir, newFiles, st.meta)))
+      if (commitAt(spark, dir, base, Manifest.Snapshot(keptFiles ++ newFiles,
+            st.dvs, st.snap.statsOf(keptFiles) ++
+              ingestStats(spark, dir, newFiles, st.meta)), st.carried))
         return (base + 1, affected)
       // lost the race: the survivors were derived against a stale
       // snapshot — drop the stage and re-derive against the winner's
@@ -2524,7 +2279,7 @@ object SnapshotTable {
     * rows' stable addresses (relative file path, row index within the
     * file) are written as a parquet SIDECAR under `_dv/`, and the new
     * manifest commits the UNCHANGED data-file list plus the sidecar
-    * ('~'-prefixed line). Readers anti-join the scan against the DV set
+    * (a DV entry). Readers anti-join the scan against the DV set
     * on the address pair, so the delete is visible atomically with the
     * commit while every byte of data stays where it was.
     *
@@ -2557,8 +2312,7 @@ object SnapshotTable {
       val newDvs = stageDv(spark, dir, hits)
       val n = stagedRowCount(spark, dir, newDvs)
       if (n == 0L) { dropStaged(spark, dir, newDvs); return (base, 0L) }
-      if (commitAt(spark, dir, base, st.files, st.carried,
-          st.dvs ++ newDvs, st.stats))
+      if (commitAt(spark, dir, base, st.snap.plus(dvs = newDvs), st.carried))
         return (base + 1, n)
       // lost the race: addresses were derived against a stale snapshot
       // (the winner may have rewritten files or deleted the same rows)
@@ -2626,9 +2380,8 @@ object SnapshotTable {
           } catch { case e: Throwable =>
             dropStaged(spark, dir, newDvs); throw e
           }
-        if (commitAt(spark, dir, base, st.files ++ newFiles, st.carried,
-            st.dvs ++ newDvs,
-            st.stats ++ ingestStats(spark, dir, newFiles, st.meta)))
+        if (commitAt(spark, dir, base, st.snap.plus(newFiles, newDvs,
+              ingestStats(spark, dir, newFiles, st.meta)), st.carried))
           return (base + 1, n)
         // lost the race: both the addresses and the rewritten rows were
         // derived against a stale snapshot — drop and re-derive
@@ -2678,8 +2431,8 @@ object SnapshotTable {
       latestState(spark, dir) match {
         case None => // empty table: merge degenerates to create
           val staged = stage(spark, dir, updates, partCol)
-          if (commitAt(spark, dir, 0L, staged, Map.empty, Seq.empty,
-              ingestStats(spark, dir, staged, Map.empty)))
+          if (commitAt(spark, dir, 0L, Manifest.Snapshot(staged,
+                stats = ingestStats(spark, dir, staged, Map.empty)), Map.empty))
             return (1L, 0L, upCount)
           dropStaged(spark, dir, staged)
         case Some(st) =>
@@ -2702,9 +2455,9 @@ object SnapshotTable {
               if (matched == 0L) Seq.empty
               else stageDv(spark, dir, hits.select("file", "pos"))
             val newFiles = stage(spark, dir, updates, partCol)
-            if (commitAt(spark, dir, st.version, st.files ++ newFiles,
-                st.carried, st.dvs ++ newDvs,
-                st.stats ++ ingestStats(spark, dir, newFiles, st.meta)))
+            if (commitAt(spark, dir, st.version, st.snap.plus(newFiles,
+                  newDvs, ingestStats(spark, dir, newFiles, st.meta)),
+                st.carried))
               return (st.version + 1, matched, upCount - matchedKeys)
             // lost the race: addresses were derived against a stale
             // snapshot — drop both stages and re-derive
@@ -2731,19 +2484,17 @@ object SnapshotTable {
     * the table. */
   def analyzeStats(spark: SparkSession, dir: String,
       statsCol: String): Long = {
-    require(!statsCol.contains("|"),
-      s"stats column name '$statsCol' contains the stats-line delimiter '|'")
+    Manifest.requireStatsColumn(statsCol)
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       val st = latestState(spark, dir)
         .getOrElse(sys.error(s"$dir has no committed snapshot"))
-      val covered = st.stats.map(parseStatRaw)
-        .collect { case (c, f, _, _) if c == statsCol => f }.toSet
+      val covered = st.stats.collect { case s if s.col == statsCol => s.file }.toSet
       val missing = st.files.filterNot(covered.contains)
       if (missing.isEmpty) return st.version
       val fresh = computeStats(spark, dir, missing, statsCol)
-      if (commitAt(spark, dir, st.version, st.files, st.carried, st.dvs,
-          st.stats ++ fresh))
+      if (commitAt(spark, dir, st.version, st.snap.plus(stats = fresh),
+          st.carried))
         return st.version + 1
       attempt += 1
     }
@@ -2847,20 +2598,20 @@ object SnapshotTable {
     * full fold).
     *
     * `derive(state, snapshot)` stages the rewrite of the DV-applied
-    * scoped snapshot and returns (staged files, their stats lines).
+    * scoped snapshot and returns (staged files, their stats).
     * `afterStage` is a test seam: invoked once, after the first stage,
     * before the first commit attempt — deterministic CAS-loss injection
     * for the race specs/gates. Commits `#datachange=false` (row-
     * preserving by construction); returns the committed version. */
   private def optimizeLoop(spark: SparkSession, dir: String,
       partCol: String, scope: Seq[String], verb: String,
-      derive: (TableState, DataFrame) => (Seq[String], Seq[String]),
+      derive: (TableState, DataFrame) => (Seq[String], Seq[Manifest.FileStat]),
       afterStage: () => Unit = () => ()): Long = {
     val (_, root) = fsFor(spark, dir)
     var base: TableState = null
     var baseScoped: Set[String] = Set.empty
     var staged: Seq[String] = Seq.empty
-    var stagedStats: Seq[String] = Seq.empty
+    var stagedStats: Seq[Manifest.FileStat] = Seq.empty
     var hook = afterStage
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
@@ -2886,9 +2637,9 @@ object SnapshotTable {
         if (scope.isEmpty) st.dvs.filterNot(base.dvs.toSet) // all folded
         else st.dvs // out-of-scope rows keep applying; folded scope
                     // addresses are dead rows (harmless)
-      if (commitAt(spark, dir, st.version, carriedFiles ++ staged,
-          st.carried + (DataChangeKey -> "false"), dvs,
-          carriedStats(st.stats, carriedFiles) ++ stagedStats))
+      if (commitAt(spark, dir, st.version, Manifest.Snapshot(
+            carriedFiles ++ staged, dvs, st.snap.statsOf(carriedFiles) ++ stagedStats),
+          st.carried + (DataChangeKey -> "false")))
         return st.version + 1
       attempt += 1
     }
@@ -2926,8 +2677,7 @@ object SnapshotTable {
   private[graft] def compactClusteredHooked(spark: SparkSession,
       dir: String, partCol: String, statsCol: String, rangeParts: Int,
       scope: Seq[String], afterStage: () => Unit): Long = {
-    require(!statsCol.contains("|"),
-      s"stats column name '$statsCol' contains the stats-line delimiter '|'")
+    Manifest.requireStatsColumn(statsCol)
     optimizeLoop(spark, dir, partCol, scope, "recluster",
       (st, snap) => {
         val parts = resolveParts(spark, rangeParts, snap)
@@ -3009,8 +2759,7 @@ object SnapshotTable {
     val n = cols.size
     require(n >= 2 && n <= 8, s"z-order needs 2..8 columns, got $n")
     require(cols.distinct.size == n, s"z-order columns must be distinct")
-    cols.foreach(c => require(!c.contains("|"),
-      "stats column names cannot contain the stats-line delimiter '|'"))
+    cols.foreach(Manifest.requireStatsColumn)
     val bits = if (bitsPerDim > 0) bitsPerDim else math.min(8, 62 / n)
     require(bits >= 1 && bits * n <= 62,
       s"bitsPerDim $bits × $n columns exceeds the 62-bit z budget")
@@ -3108,16 +2857,14 @@ object SnapshotTable {
           s"v${st.version}")
       if (toVersion == st.version) return st.version
       val target =
-        try manifestLinesAt(fs, root, dir, toVersion)
+        try committedState(fs, root, dir, toVersion)
         catch { case e: IllegalArgumentException =>
           throw new IllegalArgumentException(
             s"$dir: cannot restore to v$toVersion — its manifest was " +
               "vacuumed away; restore targets must be within the vacuum " +
               "retention window (see history() for retained versions)", e)
         }
-      guardDvFormat(dir, target)
-      val files = dataLines(target)
-      val dvs = dvLines(target)
+      val (files, dvs) = (target.files, target.dvs)
       // existence audit batched per DIRECTORY (one listing per
       // partition dir + one for _dv), not one GET per file — on an
       // object store a 10⁵-file target costs hundreds of LISTs, not
@@ -3135,8 +2882,7 @@ object SnapshotTable {
           " restore targets must be within the vacuum retention window")
       enforce(st.meta, read(spark, dir, Some(toVersion)),
         s"restore to v$toVersion")
-      if (commitAt(spark, dir, st.version, files, st.carried, dvs,
-          normalizedStats(target)))
+      if (commitAt(spark, dir, st.version, target.snap, st.carried))
         return st.version + 1
       attempt += 1
     }
@@ -3176,8 +2922,8 @@ object SnapshotTable {
       val newDvs = stageDv(spark, dir, hits)
       val n = stagedRowCount(spark, dir, newDvs)
       if (n == 0L) { dropStaged(spark, dir, newDvs); return (st.version, 0L) }
-      if (commitAt(spark, dir, st.version, st.files, st.carried,
-          st.dvs ++ newDvs, st.stats))
+      if (commitAt(spark, dir, st.version, st.snap.plus(dvs = newDvs),
+          st.carried))
         return (st.version + 1, n)
       dropStaged(spark, dir, newDvs)
       attempt += 1
@@ -3235,8 +2981,7 @@ object SnapshotTable {
         // wholesale (opt-in — it is a full copy) or refuse with the
         // remedy spelled out
         val (sfs, sroot) = fsFor(spark, srcDir)
-        if (!sfs.exists(new Path(new Path(sroot, ManifestDir),
-            s"v$since.manifest"))) {
+        if (!sfs.exists(manifestPathOf(new Path(sroot, ManifestDir), since))) {
           if (reseed) return seed()
           throw new ReplicaSourceVacuumedException(
             s"$srcDir vacuumed past the replica's marker v$since — the " +
@@ -3268,11 +3013,10 @@ object SnapshotTable {
                 .getOrElse(sys.error(s"$dstDir has no committed snapshot"))
               if (cur.meta.get(ReplicaSourceVersionKey)
                   .exists(_.toLong >= srcNow)) return cur.version
-              if (commitAt(spark, dstDir, cur.version, cur.files,
+              if (commitAt(spark, dstDir, cur.version, cur.snap,
                   cur.carried +
                     (ReplicaSourceVersionKey -> srcNow.toString) +
-                    (DataChangeKey -> "false"),
-                  cur.dvs, cur.stats))
+                    (DataChangeKey -> "false")))
                 return cur.version + 1
               attempt += 1
             }
@@ -3382,13 +3126,13 @@ object SnapshotTable {
       state match {
         case None => // empty table: merge degenerates to create
           val staged = stage(spark, dir, updates, partCol)
-          if (commitAt(spark, dir, 0L, staged, metaFor(0L)))
+          if (commitAt(spark, dir, 0L, Manifest.Snapshot(staged), metaFor(0L)))
             return (1L, 0L, upCount)
           dropStaged(spark, dir, staged) // lost to a concurrent creator:
                                          // re-derive as a real merge
-        case Some(TableState(base, files, dvs, stats, metaHdr)) =>
-          val carried = metaHdr.filter { case (k, _) => isCarriedHeader(k) }
-          enforce(metaHdr, updates, "merge")
+        case Some(st) =>
+          val base = st.version
+          enforce(st.meta, updates, "merge")
           val snap = read(spark, dir, Some(base))
           // one pass: per-partition matched-row counts -> affected set +
           // replaced total + (via distinct keys) inserted total
@@ -3410,7 +3154,7 @@ object SnapshotTable {
           matched.unpersist()
           val affectedDirs = affected.map(v => partDirOf(partCol, v)).toSet
           val keptFiles =
-            files.filterNot(f => affectedDirs.contains(f.split('/').head))
+            st.files.filterNot(f => affectedDirs.contains(f.split('/').head))
           val staged =
             if (affected.isEmpty) stage(spark, dir, updates, partCol)
             else {
@@ -3422,10 +3166,10 @@ object SnapshotTable {
                 survivors.unionByName(updates.select(snap.columns.map(col): _*)),
                 partCol)
             }
-          if (commitAt(spark, dir, base, keptFiles ++ staged,
-              carried ++ metaFor(base), dvs,
-              carriedStats(stats, keptFiles) ++
-                ingestStats(spark, dir, staged, metaHdr)))
+          if (commitAt(spark, dir, base, Manifest.Snapshot(keptFiles ++ staged,
+                st.dvs, st.snap.statsOf(keptFiles) ++
+                  ingestStats(spark, dir, staged, st.meta)),
+              st.carried ++ metaFor(base)))
             return (base + 1, replaced, upCount - matchedKeys)
           // lost the race: the match probe ran against a stale snapshot
           // (the next attempt's recheck also catches a same-batch racer)
@@ -3466,19 +3210,19 @@ object SnapshotTable {
       fs: FileSystem, mdir: Path, queryId: String, batchId: Long): Option[Long] = {
     def tagScan(limit: Int): Option[Long] = {
       if (!fs.exists(mdir)) return None
-      val tag = s"#batch=$queryId/$batchId"
+      val tag = Manifest.batchTag(queryId, batchId)
       val sorted = fs.listStatus(mdir).toSeq
-        .flatMap(f => manifestVersion(f.getPath).map(_ -> f.getPath))
+        .flatMap(f => Manifest.versionOf(f.getPath.getName).map(_ -> f.getPath))
         .sortBy(-_._1)
       (if (limit > 0) sorted.take(limit) else sorted)
-        .find { case (_, p) => readManifest(fs, p).contains(tag) }
+        .find { case (_, p) => readManifest(fs, p).meta.get("batch").contains(tag) }
         .map(_._1)
     }
     st.flatMap(_.meta.get(LastBatchPrefix + queryId)) match {
       case Some(hv) =>
-        val Array(lastId, lastV) = hv.split(":", 2)
-        if (batchId == lastId.toLong) Some(lastV.toLong)
-        else if (batchId > lastId.toLong) None
+        val (lastId, lastV) = Manifest.parseLastBatch(hv)
+        if (batchId == lastId) Some(lastV)
+        else if (batchId > lastId) None
         else { // ancient id — rare; bounded lookback, then monotonicity
           val lookback = spark.conf
             .get("spark.graft.snapshot.replayLookback", "100").toInt
@@ -3493,8 +3237,8 @@ object SnapshotTable {
     * plus the carried replay marker the O(1) check reads. */
   private def batchMeta(queryId: String, batchId: Long,
       base: Long): Map[String, String] =
-    Map("batch" -> s"$queryId/$batchId",
-      LastBatchPrefix + queryId -> s"$batchId:${base + 1}")
+    Map("batch" -> Manifest.batchTag(queryId, batchId),
+      LastBatchPrefix + queryId -> Manifest.lastBatch(batchId, base + 1))
 
   def mergeBatch(spark: SparkSession, dir: String, partCol: String,
       keyCol: String, updates: DataFrame, batchId: Long,
@@ -3540,14 +3284,14 @@ object SnapshotTable {
         dropStaged(spark, dir, staged); return rv
       }
       val st = stOpt
-        .getOrElse(TableState(0L, Seq.empty, Seq.empty, Seq.empty, Map.empty))
+        .getOrElse(EmptyState)
       try enforce(st.meta, df, s"appendBatch $queryId/$batchId")
       catch { case e: ConstraintViolationException =>
         dropStaged(spark, dir, staged); throw e
       }
-      if (commitAt(spark, dir, st.version, st.files ++ staged,
-          st.carried ++ batchMeta(queryId, batchId, st.version),
-          st.dvs, st.stats ++ ingestStats(spark, dir, staged, st.meta)))
+      if (commitAt(spark, dir, st.version, st.snap.plus(files = staged,
+            stats = ingestStats(spark, dir, staged, st.meta)),
+          st.carried ++ batchMeta(queryId, batchId, st.version)))
         return st.version + 1
       attempt += 1
     }
@@ -3614,8 +3358,8 @@ object SnapshotTable {
         if (st.dvs.isEmpty) return (base, Nil)
         // only DEAD DV rows remain: drop the sidecars (metadata-only
         // commit) so readers stop paying the no-op anti-join
-        if (commitAt(spark, dir, base, st.files,
-            st.carried + (DataChangeKey -> "false"), Seq.empty, st.stats))
+        if (commitAt(spark, dir, base, st.snap.copy(dvs = Nil),
+            st.carried + (DataChangeKey -> "false")))
           return (base + 1, Nil)
       } else {
         val crowdedVals = crowded.map(partValueOf)
@@ -3630,10 +3374,10 @@ object SnapshotTable {
         // crowded), so the folded snapshot carries NO deletion vectors;
         // row-preserving (DV fold re-emits exactly the live rows) —
         // tagged so the change feed skips it (VERDICT r14 #1)
-        if (commitAt(spark, dir, base, keptFiles ++ newFiles,
-            st.carried + (DataChangeKey -> "false"),
-            Seq.empty, carriedStats(st.stats, keptFiles) ++
-              ingestStats(spark, dir, newFiles, st.meta)))
+        if (commitAt(spark, dir, base, Manifest.Snapshot(keptFiles ++ newFiles,
+              stats = st.snap.statsOf(keptFiles) ++
+                ingestStats(spark, dir, newFiles, st.meta)),
+            st.carried + (DataChangeKey -> "false")))
           return (base + 1, crowded)
         // lost the race (e.g. to a concurrent append/DV delete): the
         // rewrite captured a stale snapshot — drop it and re-derive
@@ -3673,26 +3417,24 @@ object SnapshotTable {
     if (!fs.exists(mdir)) return 0
     val retentionMs = spark.conf
       .get("spark.graft.vacuum.retentionMs", (15L * 60 * 1000).toString).toLong
-    val (_, root2) = fsFor(spark, dir)
     val manifests = fs.listStatus(mdir).toSeq
-      .flatMap(f => manifestVersion(f.getPath).map(_ -> f.getPath))
+      .flatMap(f => Manifest.versionOf(f.getPath.getName).map(_ -> f.getPath))
       .sortBy(-_._1)
     val (keep, drop) = manifests.splitAt(math.max(1, retain))
-    // full reconstructed state per version — a delta manifest's raw
-    // lines alone would miss every carried file (r17 delta manifests)
-    val keptStates = keep.map { case (v, _) => stateAt(fs, root2, dir, v) }
+    // full reconstructed state per version — a delta manifest alone
+    // would miss every carried file (r17 delta manifests)
+    val keptStates = keep.map { case (v, _) => stateAt(fs, root, v) }
     // staged-but-unpublished WAP branches reference real bytes readers
     // cannot see yet — protected for the branch's whole lifetime, not
     // just the retention window (an audit can legitimately outlive it)
-    val branchLines = fs.listStatus(mdir).toSeq.filter { f =>
-      val n = f.getPath.getName
-      n.startsWith("branch.") && n.endsWith(".manifest")
-    }.map(f => readManifest(fs, f.getPath))
+    val branchFiles = fs.listStatus(mdir).toSeq
+      .filter(f => Manifest.isBranchFile(f.getPath.getName))
+      .flatMap(f => readManifest(fs, f.getPath).snapshot.files)
     val referenced: Set[String] =
-      keptStates.flatMap(_.files).toSet ++ branchLines.flatMap(dataLines)
+      keptStates.flatMap(_.files).toSet ++ branchFiles
     val referencedDv: Set[String] = keptStates.flatMap(_.dvs).toSet
     // committed-then-superseded garbage: safe to reclaim with no grace
-    val droppedStates = drop.map { case (v, _) => stateAt(fs, root2, dir, v) }
+    val droppedStates = drop.map { case (v, _) => stateAt(fs, root, v) }
     val droppedRef: Set[String] =
       droppedStates.flatMap(st => st.files ++ st.dvs).toSet
     val now = System.currentTimeMillis()
@@ -3762,33 +3504,28 @@ object SnapshotTable {
       // their delta tails down to this checkpoint). Also extends the
       // reclaim rule to checkpoint sidecars: ckpts below the floor are
       // subsumed by the floor's and deleted with the dropped manifests.
-      val wmRaw = readManifest(fs, manifestPathOf(mdir, wm))
-      if (metaOf(wmRaw).contains(BaseKey)) {
-        val st = stateAt(fs, root2, dir, wm)
-        writeCkpt(fs, mdir, wm, st.files, st.dvs, st.stats)
+      readManifest(fs, manifestPathOf(mdir, wm)).body match {
+        case _: Manifest.Delta => writeCkpt(fs, mdir, wm, stateAt(fs, root, wm).snap)
+        case _: Manifest.Full => ()
       }
       // watermark first, then manifest deletion — a stale writer whose
       // publish lands in the hole always sees the watermark and retracts
-      val wmPath = new Path(mdir, s"low.v$wm.watermark")
+      val wmPath = new Path(mdir, Manifest.watermarkFile(wm))
       if (!fs.exists(wmPath)) {
-        val tmp = new Path(mdir,
-          s".low.v$wm.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+        val tmp = new Path(mdir, Manifest.tmpFile(wmPath.getName))
         fs.create(tmp, true).close()
         if (!publishIfAbsent(fs, tmp, wmPath)) fs.delete(tmp, false): Unit
       }
-      // older watermark markers are subsumed by the new one
+      // older watermark markers are subsumed by the new one; checkpoint
+      // sidecars below the floor are subsumed by the floor's checkpoint
+      // (or the floor manifest itself when it is full)
       fs.listStatus(mdir).foreach { f =>
-        val n = f.getPath.getName
-        if (n.startsWith("low.v") && n.endsWith(".watermark") &&
-            n.stripPrefix("low.v").stripSuffix(".watermark")
-              .toLongOption.exists(_ < wm))
+        if (Manifest.watermarkOf(f.getPath.getName).exists(_ < wm))
           fs.delete(f.getPath, false): Unit
       }
       drop.foreach { case (_, p) => fs.delete(p, false) }
-      // checkpoint sidecars below the floor: subsumed by the floor's
-      // checkpoint (or the floor manifest itself when it is full)
       fs.listStatus(mdir).foreach { f =>
-        if (ckptVersion(f.getPath).exists(_ < wm))
+        if (Manifest.checkpointOf(f.getPath.getName).exists(_ < wm))
           fs.delete(f.getPath, false): Unit
       }
     }

@@ -1,13 +1,34 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session fixture: the engine's own session factory (so tests run
   * in the SQL mode the benchmark and the oracle gate run in), with a small
   * shuffle partition count for test scale. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Session.local(getClass.getSimpleName, "4", "4")
+
+  private var tempRoot: Option[java.nio.file.Path] = None
+
+  /** A fresh directory under the suite's temp root, which is deleted
+    * when the suite ends. With `child`, the path of a not-yet-existing
+    * entry inside the fresh directory (a table dir whose staging
+    * siblings then stay inside it too). */
+  def tempDir(child: String = ""): String = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory(getClass.getSimpleName + "-")
+      tempRoot = Some(r); r
+    }
+    val dir = java.nio.file.Files.createTempDirectory(root, "d").toString
+    if (child.isEmpty) dir else s"$dir/$child"
+  }
+
+  override protected def afterAll(): Unit =
+    try synchronized(tempRoot.foreach(r =>
+      org.apache.commons.io.FileUtils.deleteDirectory(r.toFile)))
+    finally super.afterAll()
 
   val sf: String = "/root/testdata/sf0.001"
 

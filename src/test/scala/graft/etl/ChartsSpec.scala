@@ -111,7 +111,7 @@ class ChartsSpec extends SparkSpec {
       .toDF("state", "total_sales")
     val byScore = (1 to 5).map(sc => (sc, sc.toLong * 10))
       .toDF("review_score", "order_count")
-    val dir = java.nio.file.Files.createTempDirectory("charts_spec").toFile
+    val dir = new java.io.File(tempDir())
     try {
       Charts.writeDashboard(Map(
         "agg_sales_by_date" -> byDate,

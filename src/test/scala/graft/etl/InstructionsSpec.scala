@@ -2,14 +2,14 @@ package graft.etl
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** S9 output parity: the emitted instructions file must byte-match the
   * generator string in the reference source (the reference repo's
   * committed copy of the file is empty, so the string literal between the
   * triple quotes at src/etl_functions.py:461-548 is the ground truth).
   */
-class InstructionsSpec extends AnyFunSuite {
+class InstructionsSpec extends SparkSpec {
 
   test("power_bi_instructions.md byte-matches the reference generator string") {
     val src = new String(
@@ -21,7 +21,7 @@ class InstructionsSpec extends AnyFunSuite {
     val body = src.substring(start + marker.length)
     val expected = body.substring(0, body.indexOf("\"\"\""))
 
-    val tmp = Files.createTempDirectory("s9").toString
+    val tmp = tempDir()
     Instructions.write(tmp)
     val got = new String(
       Files.readAllBytes(Paths.get(tmp, "reports", "dashboard", "power_bi_instructions.md")),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class ScaleLayoutSpec extends SparkSpec {
 
   private lazy val outDir = {
-    val dir = java.nio.file.Files.createTempDirectory("scale_layout").toString
+    val dir = tempDir()
     val result = Pipeline.build(spark, "/root/reference/data/raw")
       .fold(err => fail(err), identity)
     Load.writeAtScale(result.star, result.aggs, dir)

@@ -71,7 +71,7 @@ class TransformSpec extends SparkSpec {
   }
 
   test("H7: pipeline works without the optional translation table (P8 fallback)") {
-    val tmp = Files.createTempDirectory("raw_no_translation").toString
+    val tmp = tempDir()
     val src = "/root/reference/data/raw"
     Seq("olist_customers_dataset.csv", "olist_orders_dataset.csv",
       "olist_order_items_dataset.csv", "olist_products_dataset.csv",

@@ -16,7 +16,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   private def eventsFixture(rows: Seq[(Long, String, Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evfix").toString
+    val dir = tempDir()
     rows.map { case (id, ts, user, typ) =>
       (id, java.sql.Timestamp.valueOf(ts), user, typ, 0.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -150,7 +150,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     // at this sf): two identical payloads must pair at hamming 0; a
     // dissimilar payload must not pair with them
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mnd").toString
+    val dir = tempDir()
     val payload = (1 to 50).map(i => s"frame$i").mkString(" ")
     val other = (1 to 50).map(i => s"zq${i * 7}x").mkString("|")
     Seq((1L, payload), (2L, payload), (3L, other))
@@ -178,7 +178,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     }
     // 8 distinct lengths in one source split exactly 2/2/2/2
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bands").toString
+    val dir = tempDir()
     (1 to 8).map(i => (i.toLong, "x" * i, "en", "web", i.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -237,7 +237,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("q149_ewma_features: closed-form weights equal the sequential recursion") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ewma").toString
+    val dir = tempDir()
     // u1: three events, hand-recursable; u2: 40 events — only the last
     // 32 may contribute
     val rows =
@@ -266,7 +266,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("q148_robust_stats: winsorized mean and MAD on a known outlier group") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("robust").toString
+    val dir = tempDir()
     ((1 to 9).map(v => ("A", v.toDouble)) :+ ("A" -> 1000.0))
       .toDF("l_returnflag", "l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -305,7 +305,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("q153_interval_merge: containment and gaps resolve via the running max") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivm").toString
+    val dir = tempDir()
     val base = java.time.LocalDateTime.parse("2024-01-01T00:00:00")
     // u1: [0,10], [5,8] CONTAINED (its end is below the running max — a
     // lag-based gap check would wrongly split at the next interval),
@@ -337,7 +337,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("q158_seasonal_anomaly: only the injected spike hour is flagged") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("seasfix").toString
+    val dir = tempDir()
     // five consecutive Mondays, 2 events each at 10:00 — except the last,
     // which spikes to 10. Baseline per (view, Mon, 10h): med 2, MAD 0;
     // only the spike hour deviates (8 > 3×0).
@@ -386,7 +386,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("q167_decile_lift: 20 users at spends 1..20 produce the textbook gains curve") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("liftfix").toString
+    val dir = tempDir()
     (1 to 20).map(u => (u.toLong, java.sql.Timestamp.from(
         java.time.Instant.parse("2024-01-01T00:00:00Z")),
         u.toLong, "purchase", u.toDouble, "{}"))

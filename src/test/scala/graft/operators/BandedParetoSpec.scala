@@ -19,10 +19,10 @@ class BandedParetoSpec extends SparkSpec {
     * rows: (l_partkey, l_extendedprice, l_discount). */
   private def stage(name: String, rows: Seq[(Long, Double, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"pareto_$name")
+    val dir = tempDir()
     rows.toDF("l_partkey", "l_extendedprice", "l_discount")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    dir.toString
+    dir
   }
 
   private def run(q: String, d: String): Seq[(Long, Long, Long, Long, Long, String)] =

@@ -14,9 +14,6 @@ import org.scalacheck.rng.Seed
 class BiOpsPropertySpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("biprop").toString
-
   test("q175: Gini and shares match a first-principles recompute") {
     val gen: Gen[List[Int]] = for {
       k <- Gen.choose(2, 20)
@@ -25,7 +22,7 @@ class BiOpsPropertySpec extends SparkSpec {
     val cases = (1 to 6).flatMap(i =>
       gen.apply(Gen.Parameters.default.withSize(30), Seed(400L + i)))
     cases.foreach { counts =>
-      val dir = tmp()
+      val dir = tempDir()
       counts.zipWithIndex.flatMap { case (n, u) =>
         (1 to n).map(i => ((u * 1000 + i).toLong,
           java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), u.toLong, "view", 0.0, "{}"))
@@ -67,7 +64,7 @@ class BiOpsPropertySpec extends SparkSpec {
       val flags = conv.zipWithIndex.map { case (c, i) =>
         if (i == 0) true else if (i == 1) false else c
       }
-      val dir = tmp()
+      val dir = tempDir()
       flags.zipWithIndex.map { case (c, i) =>
         val u = (i + 1).toLong
         (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), u, "purchase",
@@ -102,7 +99,7 @@ class BiOpsPropertySpec extends SparkSpec {
     val cases = (1 to 6).flatMap(i =>
       gen.apply(Gen.Parameters.default.withSize(30), Seed(600L + i)))
     cases.foreach { li =>
-      val dir = tmp()
+      val dir = tempDir()
       li.toDF("l_orderkey", "l_partkey")
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       (1L to 6L).map(p => (p, s"B$p")).toDF("p_partkey", "p_brand")

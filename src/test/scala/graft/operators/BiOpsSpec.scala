@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class BiOpsSpec extends SparkSpec {
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("biops").toString
-
   private def eventsFixture(
       dir: String, rows: Seq[(Long, String, Long, String, Double)]): Unit = {
     import spark.implicits._
@@ -27,7 +24,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("q164_basket_rules: hand-computed support/confidence/lift") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     // 8 baskets: 6×{BX,BY}, 1×{BX}, 1×{BZ} → supp X=7, Y=6, Z=1, XY=6
     val li = (1L to 6L).flatMap(o => Seq((o, 1L), (o, 2L))) ++
       Seq((7L, 1L), (8L, 3L))
@@ -53,7 +50,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("q165_quality_checks: broken table trips exactly the broken checks") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     Seq(
       (1L, Option(10L), "F", 100.0, ts("2024-01-01 00:00:00")),
@@ -97,7 +94,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q166_quantile_rollup: rank contract holds on a known distribution") {
-    val dir = tmp()
+    val dir = tempDir()
     eventsFixture(dir, (1 to 1000).map { i =>
       (i.toLong, f"2024-01-${i % 10 + 1}%02d 00:00:00", i.toLong % 7, "m", i.toDouble)
     })
@@ -121,7 +118,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q168_ab_test: constructed extreme experiment is significant") {
-    val dir = tmp()
+    val dir = tempDir()
     // every A-user converts (purchase over the 180 cut), no B-user does
     val users = (1L to 40L)
     eventsFixture(dir, users.map { u =>
@@ -164,7 +161,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q170_theta_overlap: constructed overlap is recovered exactly") {
-    val dir = tmp()
+    val dir = tempDir()
     // X = users 1..10, Y = users 6..15 → |X∩Y| = 5 (exact-mode sketches)
     eventsFixture(dir,
       (1L to 10L).map(u => (u, "2024-01-01 00:00:00", u, "x", 0.0)) ++
@@ -179,7 +176,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q171_resample_interpolate: gap cells interpolate, edges clamp") {
-    val dir = tmp()
+    val dir = tempDir()
     // type m observed at hours 0,1,3,6 → h2=25, h4=60, h5=80 by linear
     // interpolation; type b observed only at h3 → all its cells clamp to 7
     eventsFixture(dir, Seq(
@@ -206,7 +203,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q172_rolling_median: trailing window median over known counts") {
-    val dir = tmp()
+    val dir = tempDir()
     // daily counts for type m: d1=1, d2=9, d3=2 → med7 = 1, 5, 2
     val rows =
       Seq((1, 1)) ++ (1 to 9).map(i => (2, 10 + i)) ++ Seq((3, 30), (3, 31))
@@ -224,7 +221,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q173_cusum_changepoint: two-regime series flags the level shift") {
-    val dir = tmp()
+    val dir = tempDir()
     // 10 days at n=5, then 10 days at n=15 → μ=10, MAD=5, 3×MAD=15;
     // closed-form CUSUM: s_pos ramps 5/day from day 11 (crosses 15 on
     // day 14), s_neg ramps 5/day from day 1 (crosses on day 4) and
@@ -249,7 +246,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("q174_period_growth: hand-computed MoM chain, edge months null") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     // monthly revenue 100 → 150 → 120: MoM = null, +50%, −20%
     Seq(
@@ -270,7 +267,7 @@ class BiOpsSpec extends SparkSpec {
   }
 
   test("q175_skew_report: Gini and load shares from a known distribution") {
-    val dir = tmp()
+    val dir = tempDir()
     // counts per user: u1=1, u2=1, u3=8 → sorted asc Σi·cᵢ = 1+2+24 = 27,
     // G = 2·27/(3·10) − 4/3 = 7/15
     val rows = Seq.tabulate(1)(i => (1L + i, 1L)) ++
@@ -284,7 +281,7 @@ class BiOpsSpec extends SparkSpec {
     assert(r.getDouble(4) == 1.0)                       // top10 covers all keys
     assert(math.abs(r.getDouble(5) - 7.0 / 15.0) < 1e-8, s"gini: $r")
     // uniform distribution → Gini exactly 0
-    val dir2 = tmp()
+    val dir2 = tempDir()
     eventsFixture(dir2, (0 until 6).map(i =>
       ((i + 1).toLong, "2024-01-01 00:00:00", (i % 3).toLong, "view", 0.0)))
     val u = graft.EventQueries.queries("q175_skew_report")(spark, dir2).head()
@@ -293,7 +290,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("s176_hard_negatives: same-label near neighbor skipped, hardest kept") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     // v0/v1 share label 0 and are near-identical; v2 (label 1) is the
     // hard negative for v0 — closer than v3 but farther than v1
     Seq(
@@ -320,7 +317,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("q177_linear_attribution: equal split, 7-day boundary, direct fallback") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     eventsFixture(dir, Seq(
       (1L, "2024-01-08 00:00:00", 1L, "click", 0.0),  // in o101's lookback
@@ -369,7 +366,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("t179_fertility: hand-computed multilingual tokenizer stats") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     // en: "ab cd" (2 words, 2 subtokens, 5 bytes) + "don't stop"
     //     (2 words, 4 subtokens: don|'|t|stop, 10 bytes)
     // zh: "你好 世界" (2 words, 4 CJK subtokens, 13 UTF-8 bytes)
@@ -424,7 +421,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("t187_language_mixture: code-switched doc flagged, pure docs not") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     Seq(
       // pure English: 5 en markers, nothing else → not mixed
       (1L, "the cat is of the and is house"),
@@ -452,7 +449,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("d188_normalized_dedup: reformatted copies collapse, raw hash would miss") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     Seq(
       (1L, "Hello, World!  How are you?"),
       (2L, "hello world how are you"),        // normalized twin of 1
@@ -489,7 +486,7 @@ class BiOpsSpec extends SparkSpec {
     }
     // crafted: u1 active d1 & d3; u2 active d3 only; u3 active d40
     // (outside d3's 28-day window going forward, inside nothing shared)
-    val dir = tmp()
+    val dir = tempDir()
     eventsFixture(dir, Seq(
       (1L, "2024-01-01 01:00:00", 1L, "view", 0.0),
       (2L, "2024-01-03 01:00:00", 1L, "view", 0.0),
@@ -527,7 +524,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("t193_zipf_slope: exact power law fits slope -1 with r2 = 1") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     // term wk appears 2520/k times for k = 1..10 (2520 = lcm(1..10), so
     // every count is exact): ln(freq) = ln(2520) − ln(rank) exactly
     val text = (1 to 10).flatMap(k => Seq.fill(2520 / k)(s"w$k")).mkString(" ")
@@ -540,7 +537,7 @@ class BiOpsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(2) - math.log(2520.0)) < 1e-5, s"intercept: $r")
     assert(r.getLong(5) == (1 to 10).map(2520 / _).sum.toLong)
     // rank ties broken by term: a uniform corpus still fits deterministically
-    val dir2 = tmp()
+    val dir2 = tempDir()
     Seq((1L, "a b c a b c", "en")).toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val u = graft.TextQueries.queries("t193_zipf_slope")(spark, dir2).head()
@@ -550,7 +547,7 @@ class BiOpsSpec extends SparkSpec {
 
   test("q169_attribution: as-of pick, equal-ts touch, and direct fallback") {
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     eventsFixture(dir, Seq(
       (1L, "2024-01-01 01:00:00", 1L, "click", 0.0),

@@ -12,7 +12,7 @@ class CompressionSpec extends SparkSpec {
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compr").toString
+    val dir = tempDir()
     rows.map { case (id, src, t) => (id, src, t, t.length.toLong) }
       .toDF("doc_id", "source", "text", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -23,7 +23,7 @@ class CorpusOpsSpec extends SparkSpec {
     }
     // a synthetic one-phrase-forever doc must fail both filters
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rep").toString
+    val dir = tempDir()
     Seq((1L, Seq.fill(40)("buy cheap pills now").mkString(" ")),
         (2L, (1 to 120).map(i => s"tok$i").mkString(" ")))
       .toDF("doc_id", "text")
@@ -73,7 +73,7 @@ class CorpusOpsSpec extends SparkSpec {
     // synthetic: doc 29 is eval; doc 1 copies 13 of its tokens verbatim
     // (one shared 13-gram), doc 2 is disjoint
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("decon").toString
+    val dir = tempDir()
     val evalText = (1 to 20).map(i => s"ev$i").mkString(" ")
     Seq((29L, evalText),
         (1L, "lead " + (3 to 15).map(i => s"ev$i").mkString(" ") + " tail"),
@@ -218,7 +218,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t111_source_overlap: hand-computed contamination matrix incl. zero-overlap pairs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("overlap").toString
+    val dir = tempDir()
     // srcA and srcB share both 8-grams (identical text); srcC is disjoint
     val txt = "w1 w2 w3 w4 w5 w6 w7 w8 w9"
     Seq((1L, txt, "en", "srcA", 0L), (2L, txt, "en", "srcB", 0L),
@@ -279,7 +279,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t101_dsir: target-vocabulary docs outrank off-target docs and get selected") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dsir").toString
+    val dir = tempDir()
     // src0/src1 are the target domain: give them a distinctive vocabulary;
     // off-target docs either share it (should score high) or not (low)
     val mk = (ts: Seq[String]) => ts.mkString(" ")
@@ -337,7 +337,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t106_bpe_train: hand-computed merge order on a synthetic corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = tempDir()
     // words: "aaab"×2, "cd"×1
     //  round 1: (a,a)=4 wins → aaab = [aa, a, b]
     //  round 2: (aa,a)=2 vs (a,b)=2 vs (c,d)=1 — lexicographic tie-break
@@ -367,7 +367,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t102_novelty: exact copies score 0, fresh docs score 1, overlap in between") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("novel").toString
+    val dir = tempDir()
     val base = (1 to 20).map(i => s"w$i").mkString(" ")        // 13 distinct 8-grams
     val fresh = (1 to 20).map(i => s"x$i").mkString(" ")
     val half = ((1 to 10).map(i => s"w$i") ++ (1 to 10).map(i => s"y$i")).mkString(" ")
@@ -388,7 +388,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("d112_dup_span_coverage: interval merge on hand-built overlap cases") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("spancov").toString
+    val dir = tempDir()
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val fresh = (1 to 20).map(i => s"x$i").mkString(" ")
     // shares w1..w10 with doc1 → dup 8-gram starts {1,2,3}, merged
@@ -426,7 +426,7 @@ class CorpusOpsSpec extends SparkSpec {
     }
     // identical text ⇒ identical score (pure function of content)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cls").toString
+    val dir = tempDir()
     Seq((1L, "alpha beta gamma", "en", "s", 0L), (2L, "alpha beta gamma", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -438,7 +438,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t114_bigram_logprob: formulaic text outranks novel text") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bglm").toString
+    val dir = tempDir()
     // doc1 repeats one bigram; doc2 is all unique bigrams over the same corpus
     val formulaic = Seq.fill(15)("p q").mkString(" ")
     val novel = (1 to 30).map(i => s"u$i").mkString(" ")
@@ -457,7 +457,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t115_mixture_temperature: sqrt flattening boosts small sources") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mix").toString
+    val dir = tempDir()
     // small = 100 tokens, big = 400 → sqrt weights 1:2, naive share 1:4
     val small = (1 to 100).map(_ => "s").mkString(" ")
     val big = (1 to 400).map(_ => "b").mkString(" ")
@@ -499,7 +499,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("d118_split_leakage: leaked val doc flagged, clean test doc not") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("leak").toString
+    val dir = tempDir()
     // t69 buckets: doc 1 → train, doc 5 → val, doc 3 → test
     val shared = (1 to 20).map(i => s"w$i").mkString(" ")
     val fresh = (1 to 20).map(i => s"x$i").mkString(" ")
@@ -518,7 +518,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t121_token_entropy: uniform doc scores 0, all-distinct doc scores ln(n)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ent").toString
+    val dir = tempDir()
     Seq((1L, Seq.fill(16)("same").mkString(" "), "en", "s", 0L),
         (2L, (1 to 16).map(i => s"w$i").mkString(" "), "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -535,7 +535,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("d122_dedup_report: per-source rates from a cross-source duplicate") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("drep").toString
+    val dir = tempDir()
     val same = (1 to 30).map(i => s"w$i").mkString(" ")
     val other = (1 to 30).map(i => s"x$i").mkString(" ")
     Seq((1L, same, "en", "srcA", 0L),
@@ -580,7 +580,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("t124_oov_rate: rare tokens counted, frequent tokens pass") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("oov").toString
+    val dir = tempDir()
     // "common" appears 10 times corpus-wide (>= 5); rare tokens once each
     Seq((1L, Seq.fill(5)("common").mkString(" "), "en", "s", 0L),
         (2L, Seq.fill(5)("common").mkString(" ") + " rare1 rare2 rare3 rare4 rare5",
@@ -657,7 +657,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("m120_media_dedup: byte-identical payloads collapse to the first copy") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mdedup").toString
+    val dir = tempDir()
     Seq((1L, "same payload", "en", "s", 0L), (4L, "same payload", "en", "s", 0L),
         (2L, "unique payload", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -685,7 +685,7 @@ class CorpusOpsSpec extends SparkSpec {
   test("t144_line_dedup: boilerplate keeps only its first occurrence; reconstruction preserves order") {
     import spark.implicits._
     val boiler = "subscribe to our newsletter"
-    val dir = java.nio.file.Files.createTempDirectory("linededup").toString
+    val dir = tempDir()
     Seq(
       (1L, s"first article body. $boiler. more first content"),
       (2L, s"$boiler. second article body"),

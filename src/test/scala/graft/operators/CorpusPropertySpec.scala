@@ -31,7 +31,7 @@ class CorpusPropertySpec extends SparkSpec {
       corpusGen.apply(Gen.Parameters.default.withSize(30), Seed(i.toLong)))
 
   private def stage(rows: List[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("prop").toString
+    val dir = tempDir()
     rows.map { case (id, t) => (id, t, "en", s"src${id % 3}", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -13,7 +13,7 @@ class DedupCacheSpec extends SparkSpec {
   import spark.implicits._
 
   test("invalidateCaches: a rewritten directory serves fresh shingles and embeddings") {
-    val dir = java.nio.file.Files.createTempDirectory("dedup_cache").toString
+    val dir = tempDir()
 
     def writeCorpus(docs: Seq[(Long, String)], nVecs: Int): Unit = {
       docs.toDF("doc_id", "text")

@@ -37,7 +37,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val docs = Seq((0L, base), (1L, nearDup), (2L, unrelated)).toDF("doc_id", "text")
     docs.createOrReplaceTempView("crafted_docs")
     // run the simhash pipeline over the crafted docs by writing them to parquet
-    val tmp = java.nio.file.Files.createTempDirectory("simhash").toString
+    val tmp = tempDir()
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -55,7 +55,7 @@ class DedupSimilaritySpec extends SparkSpec {
       else s"totally distinct payload ${i}a ${i}b ${i}c ${i}d"
       (i, s"alpha beta gamma $uniq")
     }.toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("hotshingle").toString
+    val tmp = tempDir()
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -112,7 +112,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val dense = (0 until 40).map { i =>
         (i.toLong, (0 until 30).map(j => vocab((i + j) % 10)).mkString(" "))
       }.toDF("doc_id", "text")
-      val tmpD = java.nio.file.Files.createTempDirectory("dense").toString
+      val tmpD = tempDir()
       dense.withColumn("lang", lit("en")).withColumn("source", lit("t"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .write.mode("overwrite").parquet(s"$tmpD/documents.parquet")
@@ -132,7 +132,7 @@ class DedupSimilaritySpec extends SparkSpec {
         Seq((2L * i, base.mkString(" ")),
           (2L * i + 1, (base.dropRight(1) :+ s"alt$i").mkString(" ")))
       }.toDF("doc_id", "text")
-      val tmp = java.nio.file.Files.createTempDirectory("zipf").toString
+      val tmp = tempDir()
       docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -256,7 +256,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val docs = (0 until 17).map { i =>
       (i.toLong, (10 * i until 10 * i + 40).map(j => s"w$j").mkString(" "))
     }.toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("chain").toString
+    val tmp = tempDir()
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -450,7 +450,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // crafted fixture: a 128-byte ASCII doc, first half 'a' (97), second
     // half 'b' (98) -> segment means [97 x32, 98 x32]; a query embedding
     // equal to that vector must retrieve the doc at rank 1 with cosine ~1
-    val tmp = java.nio.file.Files.createTempDirectory("xmodal").toString
+    val tmp = tempDir()
     val docs = Seq((0L, "a" * 64 + "b" * 64), (1L, "z" * 40)).toDF("doc_id", "text")
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -473,7 +473,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val quote = (1 to 20).map(i => s"q$i").mkString(" ")
     val page = (1 to 380).map(i => s"w$i").mkString(" ") + " " + quote
     val other = (1 to 50).map(i => s"z$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("contain").toString
+    val tmp = tempDir()
     Seq((0L, quote), (1L, page), (2L, other)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -608,7 +608,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   private def embFixture(vecs: Seq[(Long, Seq[Float])]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("embfix").toString
+    val tmp = tempDir()
     vecs.map { case (id, v) => (id, v, 0) }.toDF("vec_id", "embedding", "label")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"),
         col("label").cast("int").as("label"))

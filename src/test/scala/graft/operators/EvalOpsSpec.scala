@@ -19,7 +19,7 @@ class EvalOpsSpec extends SparkSpec {
   private def eventsFixture(
       rows: Seq[(Long, String, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evalfix").toString
+    val dir = tempDir()
     rows.map { case (id, ts, user, typ, v) =>
       (id, java.sql.Timestamp.valueOf(ts), user, typ, v, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -29,7 +29,7 @@ class EvalOpsSpec extends SparkSpec {
 
   private def docsFixture(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docfix").toString
+    val dir = tempDir()
     rows.map { case (id, text) => (id, text, "en", "src0", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -178,7 +178,7 @@ class EvalOpsSpec extends SparkSpec {
 
   test("s226_item_cf: cosine on a 3-basket fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cffix").toString
+    val dir = tempDir()
     // customers 1,2 both buy {10, 20}; customer 3 buys {10, 30}
     // n(10)=3, n(20)=2, n(30)=1; co(10,20)=2 → cos = 2/√6
     Seq((100L, 1L), (101L, 1L), (102L, 2L), (103L, 2L), (104L, 3L), (105L, 3L))
@@ -212,7 +212,7 @@ class EvalOpsSpec extends SparkSpec {
 
   test("q227_psi_drift: identical halves give PSI ~ 0 and no flag") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("psifix").toString
+    val dir = tempDir()
     // the same 4 prices land on both sides of the cut → p == q per band
     val rows = for {
       side <- Seq("1998-01-01 00:00:00", "1999-01-01 00:00:00")

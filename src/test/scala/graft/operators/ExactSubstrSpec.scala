@@ -13,7 +13,7 @@ class ExactSubstrSpec extends SparkSpec {
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("exsub").toString
+    val dir = tempDir()
     rows.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

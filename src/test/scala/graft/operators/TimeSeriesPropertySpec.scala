@@ -18,7 +18,7 @@ class TimeSeriesPropertySpec extends SparkSpec {
   /** Per-day event counts as a random series: day d gets counts(d−1)
     * synthetic events. */
   private def stageCounts(counts: List[Int]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("tsprop").toString
+    val dir = tempDir()
     val rows = counts.zipWithIndex.flatMap { case (n, di) =>
       (1 to n).map { i =>
         val ts = java.sql.Timestamp.valueOf(f"2024-01-${di + 1}%02d 06:00:00")
@@ -75,7 +75,7 @@ class TimeSeriesPropertySpec extends SparkSpec {
     val cases = (1 to 5).flatMap(i =>
       gen.apply(Gen.Parameters.default.withSize(30), Seed(200L + i)))
     cases.foreach { hours =>
-      val dir = java.nio.file.Files.createTempDirectory("tsprop").toString
+      val dir = tempDir()
       hours.zipWithIndex.map { case (h, i) =>
         ((i + 1).toLong, java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:00:00"),
           1L, "m", (h * h).toDouble, "{}")
@@ -115,7 +115,7 @@ class TimeSeriesPropertySpec extends SparkSpec {
     val cases = (1 to 5).flatMap(i =>
       gen.apply(Gen.Parameters.default.withSize(30), Seed(300L + i)))
     cases.foreach { ivs =>
-      val dir = java.nio.file.Files.createTempDirectory("tsprop").toString
+      val dir = tempDir()
       ivs.zipWithIndex.map { case ((st, len), i) =>
         ((i + 1).toLong,
           java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z")

@@ -13,7 +13,7 @@ class WeightedSampleSpec extends SparkSpec {
 
   private def writeDocs(rows: Seq[(Long, Long)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("wsample").toString
+    val dir = tempDir()
     rows.map { case (id, w) => (id, s"doc $id", w) }
       .toDF("doc_id", "text", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

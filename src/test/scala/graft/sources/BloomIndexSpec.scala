@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class BloomIndexSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapbloom").toString + "/t"
-
   private def mkDf(ks: Seq[Long]) = {
     import spark.implicits._
     ks.map(k => (k, k % 2, k * 7L)).toDF("k", "p", "v")
@@ -24,7 +21,7 @@ class BloomIndexSpec extends SparkSpec {
 
   test("analyzeBloom prunes point lookups exactly, extends incrementally, " +
       "is idempotent, and composes with DV deletes") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // interleaved appends: every file spans the key domain — min/max
     // stats could never prune a point predicate here
     (0 until 4).foreach { i =>
@@ -63,7 +60,7 @@ class BloomIndexSpec extends SparkSpec {
 
   test("the index header carries across commit classes and vacuum keeps " +
       "the referenced sidecar") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(1L to 50L), "p")
     SnapshotTable.analyzeBloom(spark, dir, "k", 1L << 14)
     SnapshotTable.append(spark, dir, mkDf(Seq(60L)), "p")
@@ -91,7 +88,7 @@ class BloomIndexSpec extends SparkSpec {
   test("lookup and analyzeBloom never move sketch BYTES to the driver: " +
       "collected results stay occurrence-sized at a forced many-files, " +
       "big-sketch tier") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // 12 interleaved appends x 1 MiB sketches = ~12 MiB of sketch bytes;
     // driver-side task results must stay orders of magnitude below that
     (0 until 12).foreach { i =>
@@ -133,7 +130,7 @@ class BloomIndexSpec extends SparkSpec {
   test("the probe literal is cast to the column's stored type before " +
       "hashing — an INT column probed with a Long still matches") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     val df = (1 to 300).map(i => (i, i % 2, i * 3)).toDF("k", "p", "v")
     (0 until 3).foreach { i =>
       val chunk = df.filter(col("k") % 3 === i)
@@ -154,7 +151,7 @@ class BloomIndexSpec extends SparkSpec {
   test("an un-castable probe value is refused loudly, and a committed " +
       "zero-file snapshot carrying the index header fails on the " +
       "documented empty-snapshot contract, not NoSuchElement (ADVICE r15)") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 100L), "p")
     SnapshotTable.analyzeBloom(spark, dir, "k")
     // a probe the stored type cannot represent TRY-casts to NULL;

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class ChangeFeedSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapcdf").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, Long, Long)]) = {
     import spark.implicits._
     rows.toDF("k", "p", "v")
@@ -41,7 +38,7 @@ class ChangeFeedSpec extends SparkSpec {
   }
 
   test("append + DV delete: feed is exactly (new rows, deleted rows)") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L))), "p")
     SnapshotTable.append(spark, dir, mkDf(Seq((4L, 1L, 40L))), "p")
@@ -70,7 +67,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("a row appended AND DV-deleted within the window never surfaces " +
       "as an insert") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L))), "p")
     SnapshotTable.append(spark, dir, mkDf(Seq((2L, 0L, 20L))), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 2L)
@@ -82,7 +79,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("MERGE surfaces as delete(old row) + insert(new row); compact " +
       "is skipped; partition-rewrite deletes surface exactly") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L))), "p")
     SnapshotTable.merge(spark, dir, "p", "k",
@@ -104,7 +101,7 @@ class ChangeFeedSpec extends SparkSpec {
   test("changes straddling maintenance commits NET to the endpoint " +
       "diff: compactClustered and the DV-fold rewrite feed nothing, " +
       "and a row appended before and deleted after an OPTIMIZE cancels") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L))), "p") // v1
     SnapshotTable.append(spark, dir, mkDf(Seq((4L, 1L, 40L))), "p") // v2
@@ -137,7 +134,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("a wide commit range (200+) walks without plan blow-up and " +
       "folds exactly") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((0L, 0L, 0L))), "p")
     val n = 210
     (1 to n).foreach { i =>
@@ -158,7 +155,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("refreshWithDeletes folds a DV erasure into the view without a " +
       "rebuild and matches the from-scratch recompute") {
-    val src = tempTable(); val mv = tempTable()
+    val src = tempDir("t"); val mv = tempDir("t")
     SnapshotTable.write(spark, src,
       mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L), (4L, 1L, 40L))), "p")
     val aggs = Seq(MaterializedView.AggSpec("count", "", "n"),
@@ -187,7 +184,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("tableChanges attributes every row change to its commit and the " +
       "fold across the range reproduces the endpoint") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L))), "p")
     SnapshotTable.append(spark, dir, mkDf(Seq((3L, 1L, 30L))), "p")       // v2
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 2L)              // v3
@@ -226,7 +223,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("refreshWithDeletes retires a group whose every row is deleted " +
       "and still requires a count column on the invertible path") {
-    val src = tempTable(); val mv = tempTable()
+    val src = tempDir("t"); val mv = tempDir("t")
     SnapshotTable.write(spark, src,
       mkDf(Seq((1L, 0L, 10L), (3L, 1L, 30L))), "p")
     val aggs = Seq(MaterializedView.AggSpec("count", "", "n"),
@@ -247,7 +244,7 @@ class ChangeFeedSpec extends SparkSpec {
   test("refreshWithDeletes folds min/max by partial-group recompute: " +
       "touched groups re-aggregate (partition-pruned), untouched groups " +
       "never rescan, fully-deleted groups leave the state") {
-    val src = tempTable(); val mv = tempTable()
+    val src = tempDir("t"); val mv = tempDir("t")
     SnapshotTable.write(spark, src, mkDf(Seq(
       (1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L), (4L, 1L, 40L),
       (5L, 2L, 50L))), "p")

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class ConcurrentWritersSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapconc").toString + "/t"
-
   private def mkDf(pairs: Seq[(Long, Long)]) = {
     import spark.implicits._
     pairs.toDF("k", "p")
@@ -41,7 +38,7 @@ class ConcurrentWritersSpec extends SparkSpec {
   }
 
   test("racing appends: both writers' rows land, none dropped") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((0L, 0L))), "p")
     val batches = (1 to 6).map(i => mkDf(Seq((i * 10L, (i % 2).toLong))))
     inParallel(batches.map(b =>
@@ -53,7 +50,7 @@ class ConcurrentWritersSpec extends SparkSpec {
   }
 
   test("racing DV deletes: both delete sets apply") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf((1L to 20L).map(k => (k, k % 2))), "p")
     inParallel(
       () => { SnapshotTable.deleteWhereDV(spark, dir, col("k") <= 5); () },
@@ -63,7 +60,7 @@ class ConcurrentWritersSpec extends SparkSpec {
   }
 
   test("append racing a DV delete: the deletion AND the new rows survive") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf((1L to 10L).map(k => (k, k % 2))), "p")
     inParallel(
       () => { SnapshotTable.deleteWhereDV(spark, dir, col("k") <= 3); () },
@@ -73,7 +70,7 @@ class ConcurrentWritersSpec extends SparkSpec {
   }
 
   test("merge racing an append: upsert and append both land") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 1L))), "p")
     inParallel(
       () => { SnapshotTable.merge(spark, dir, "p", "k",
@@ -89,7 +86,7 @@ class ConcurrentWritersSpec extends SparkSpec {
 
   test("MoR merge racing an append: the loser re-derives — upsert and " +
       "append both land, no DV addresses a stale file") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf((1L to 20L).map(k => (k, k % 2))), "p")
     inParallel(
       () => { SnapshotTable.mergeDV(spark, dir, "p", "k",
@@ -107,7 +104,7 @@ class ConcurrentWritersSpec extends SparkSpec {
   test("restore racing an append: restore re-derives at the winner's " +
       "version; the relation is the target's and the racer's rows stay " +
       "time-travel readable") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L))), "p") // v1
     SnapshotTable.append(spark, dir, mkDf(Seq((2L, 1L))), "p") // v2
     SnapshotTable.append(spark, dir, mkDf(Seq((3L, 0L))), "p") // v3

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class ConstraintSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapcons").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, Long, java.lang.Long)]) = {
     import spark.implicits._
     rows.map { case (k, p, v) => (k, p, Option(v).map(_.longValue)) }
@@ -28,7 +25,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("add/enforce/drop: bad batches refused wholesale, version and " +
       "relation untouched; null predicate passes (SQL UNKNOWN)") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     val vC = SnapshotTable.addConstraint(spark, dir, "v_pos", "v > 0")
@@ -66,7 +63,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("a constraint the table already violates is refused; names are " +
       "validated; duplicates refused") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, -1L))), "p")
     val e = intercept[SnapshotTable.ConstraintViolationException] {
       SnapshotTable.addConstraint(spark, dir, "v_pos", "v > 0")
@@ -88,7 +85,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("constraints survive every commit class: DV delete, compact, " +
       "streaming appendBatch, and a full write() replace") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     SnapshotTable.addConstraint(spark, dir, "v_pos", "v > 0")
@@ -123,7 +120,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("writeClustered validates per CAS attempt like write(): a " +
       "violating full replace leaves version, relation, and stats alone") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L))), "p")
     SnapshotTable.addConstraint(spark, dir, "v_pos", "v > 0")
     val v0 = SnapshotTable.latest(spark, dir).get._1

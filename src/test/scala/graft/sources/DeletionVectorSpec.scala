@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class DeletionVectorSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapdv").toString + "/t"
-
   private def mkDf(pairs: Seq[(Long, Long)]) = {
     import spark.implicits._
     pairs.toDF("k", "p")
@@ -27,7 +24,7 @@ class DeletionVectorSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
 
   test("deleteWhereDV removes rows without rewriting any data file") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L))), "p")
     val (_, f1, dv1) = SnapshotTable.latestFull(spark, dir).get
@@ -43,7 +40,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("stacked DVs compose; re-deleting a deleted row is a no-op") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf((1L to 10L).map(k => (k, k % 2))), "p")
     val (_, n1) = SnapshotTable.deleteWhereDV(spark, dir, col("k") <= 3)
     assert(n1 == 3L)
@@ -54,7 +51,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("no-match DV delete commits nothing") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val v1 = SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L))), "p")
     val (v, n) = SnapshotTable.deleteWhereDV(spark, dir, col("k") > 100)
     assert(v == v1 && n == 0L)
@@ -62,7 +59,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("append and merge carry deletion vectors forward") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L), (3L, 1L))), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 2L)
     SnapshotTable.append(spark, dir, mkDf(Seq((4L, 1L))), "p")
@@ -75,7 +72,7 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("compact folds DVs COMPLETELY: DV-referenced partitions rewrite " +
       "even when not crowded, and OPTIMIZE is idempotent") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // p=0 gets TWO files (crowded); p=1 one file — but p=1 holds a live
     // DV row, so it must rewrite too or its deletion could never fold
     // (ADVICE r13: the old skip left uncrowded partitions' DVs pinned
@@ -102,7 +99,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("compact with every partition crowded folds ALL DVs away") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (3L, 1L))), "p")
     SnapshotTable.append(spark, dir, mkDf(Seq((2L, 0L), (4L, 1L))), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k").isin(2L, 3L))
@@ -113,7 +110,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("vacuum reclaims DV sidecars no retained manifest references") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L), (3L, 0L))), "p")
     SnapshotTable.append(spark, dir, mkDf(Seq((4L, 0L))), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 2L)
@@ -129,7 +126,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("write (full replace) clears deletion vectors") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L))), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 1L)
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L))), "p")
@@ -139,7 +136,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("readAppendsSince fails loudly when a DV landed in between") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val v1 = SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L))), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 1L)
     // a file-list diff cannot see the deletion — an incremental
@@ -160,7 +157,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("plan pin: DV-free read keeps the plain scan; DV'd read joins") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L))), "p")
     val plain = SnapshotTable.read(spark, dir)
       .queryExecution.executedPlan.toString
@@ -174,7 +171,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("mergeBatch: replayed batch returns its version without re-applying") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val v1 = SnapshotTable.mergeBatch(spark, dir, "p", "k",
       mkDf(Seq((1L, 0L), (2L, 1L))), batchId = 0L, queryId = "t")
     assert(v1 == 1L)
@@ -220,7 +217,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(spread.forall(_.getLong(1) <= 2L),
       "targetFiles=2 must bound each partition's task (=file) count at 2")
     // end to end: the staged rewrite honors the file bound
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, df.filter(col("k") % 2 === 0), "p")
     SnapshotTable.append(spark, dir, df.filter(col("k") % 2 =!= 0), "p")
     SnapshotTable.compact(spark, dir, "p", targetFiles = 1)

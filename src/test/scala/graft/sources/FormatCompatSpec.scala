@@ -4,21 +4,18 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** On-disk manifest format compatibility (ADVICE r14): this revision
-  * stamps `#format=2` in every manifest; pre-header (format-1) manifests
-  * ordered stats lines `col|file|min|max` and wrote DV addresses
-  * URI-escaped. The contract: format-1 STATS parse exactly via the old
-  * field order (the header's absence is the discriminator); format-1
-  * manifests carrying DELETION VECTORS are refused loudly with the
-  * rewrite remedy — their escaped addresses would silently stop matching
-  * the decoded scan addresses, resurrecting deleted rows.
+  * stamps `#format=2` in every manifest and reads nothing else.
+  * Pre-header (format-1) manifests ordered stats lines `col|file|min|max`
+  * and wrote DV addresses URI-escaped; their escaped addresses would
+  * silently stop matching the decoded scan addresses, resurrecting
+  * deleted rows. The contract: a manifest without the header is refused
+  * loudly with the rewrite remedy on every read path, with or without
+  * deletion vectors.
   *
   * The tests perform manifest surgery by hand — they ARE the legacy
   * writer.
   */
 class FormatCompatSpec extends SparkSpec {
-
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapfmt").toString + "/t"
 
   private def mkDf(ks: Seq[Long]) = {
     import spark.implicits._
@@ -35,56 +32,37 @@ class FormatCompatSpec extends SparkSpec {
       .ListHasAsScala(lines).asScala.toSeq)
     java.nio.file.Files.write(p,
       scala.jdk.CollectionConverters.SeqHasAsJava(fixed).asJava)
-    // surgery bypasses the commit protocol, so drop the memoized lines
+    // surgery bypasses the commit protocol, so drop the memoized entry
     SnapshotTable.invalidateManifestCache(
       new org.apache.hadoop.fs.Path(p.toString).toString)
     (): Unit
   }
 
-  test("format-1 stats lines (old col|file|min|max order) parse via the " +
-      "fallback and prune ranges identically") {
-    val dir = tempTable()
-    SnapshotTable.writeClustered(spark, dir, mkDf(1L to 400L), "p", "k",
-      rangeParts = 4)
-    val statsBefore = SnapshotTable.fileStats(spark, dir, "k")
-    assert(statsBefore.nonEmpty)
-    val (_, keptBefore, totBefore) =
-      SnapshotTable.readRange(spark, dir, "k", 10L, 60L)
-    // de-evolve the manifest to format 1: drop the header, swap the
-    // stats fields back to the old order
-    rewriteManifest(dir, 1L, lines => lines.flatMap { l =>
-      if (l.startsWith("#format=")) None
-      else if (l.startsWith("%")) {
-        val Array(c, mn, mx, f) = l.stripPrefix("%").split("\\|", 4)
-        Some(s"%$c|$f|$mn|$mx")
-      } else Some(l)
-    })
-    assert(SnapshotTable.fileStats(spark, dir, "k") == statsBefore,
-      "format-1 stats must parse to the same index")
-    val (df, kept, tot) = SnapshotTable.readRange(spark, dir, "k", 10L, 60L)
-    assert((kept, tot) == (keptBefore, totBefore),
-      "pruning must be identical under the fallback parse")
-    assert(df.count() == 51L)
+  private def assertRefused(what: String)(body: => Any): Unit = {
+    val e = intercept[IllegalStateException](body)
+    assert(e.getMessage.contains("Rewrite the table"), s"$what: ${e.getMessage}")
+  }
+
+  /** Strip v2's header and require every read path to refuse. */
+  private def assertHeaderlessRefused(dir: String): Unit = {
+    rewriteManifest(dir, 2L, _.filterNot(_.startsWith("#format=")))
+    assertRefused("read")(SnapshotTable.read(spark, dir).count())
+    assertRefused("readChangesSince")(SnapshotTable.readChangesSince(spark, dir, 1L))
+    assertRefused("restore")(SnapshotTable.restore(spark, dir, 1L))
   }
 
   test("a format-1 manifest carrying deletion vectors is refused with " +
       "the rewrite remedy on every read path") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(1L to 50L), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("k") === 7L) // v2: has a DV
-    rewriteManifest(dir, 2L,
-      _.filterNot(_.startsWith("#format=")))
-    val e = intercept[IllegalStateException] {
-      SnapshotTable.read(spark, dir).count()
-    }
-    assert(e.getMessage.contains("Rewrite the table"), e.getMessage)
-    intercept[IllegalStateException] {
-      SnapshotTable.readChangesSince(spark, dir, 1L)
-    }
-    // a DV-free format-1 manifest stays readable (append-era tables)
-    val plain = tempTable()
-    SnapshotTable.write(spark, plain, mkDf(1L to 10L), "p")
-    rewriteManifest(plain, 1L, _.filterNot(_.startsWith("#format=")))
-    assert(SnapshotTable.read(spark, plain).count() == 10L)
+    assertHeaderlessRefused(dir)
+  }
+
+  test("a DV-free manifest without the format-2 header is refused too") {
+    val dir = tempDir("t")
+    SnapshotTable.write(spark, dir, mkDf(1L to 10L), "p")
+    SnapshotTable.append(spark, dir, mkDf(11L to 20L), "p") // v2: no DV
+    assertHeaderlessRefused(dir)
   }
 }

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class HiddenPartitioningSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snaphp").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, String, Long)]) = {
     import spark.implicits._
     rows.toDF("id", "ts_s", "v")
@@ -26,7 +23,7 @@ class HiddenPartitioningSpec extends SparkSpec {
 
   test("day transform: hidden column, exact edge pruning, appends " +
       "through the recorded transform, DVs apply through the pruned read") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val base = mkDf(Seq(
       (1L, "2024-01-01 00:00:00", 10L), // first instant of its day
       (2L, "2024-01-01 23:59:59", 20L), // last instant
@@ -70,7 +67,7 @@ class HiddenPartitioningSpec extends SparkSpec {
 
   test("month / hour / year bucket spans are exact; unknown transforms " +
       "and non-transform tables fail loudly") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeTransformPartitioned(spark, dir, mkDf(Seq(
       (1L, "2024-01-31 23:00:00", 1L),
       (2L, "2024-02-01 00:30:00", 2L),
@@ -80,7 +77,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     assert(ids(dfm) == Set(2L) && keptm == 1 && totm == 3,
       s"month pruning: kept $keptm/$totm -> ${ids(dfm)}")
 
-    val hr = tempTable()
+    val hr = tempDir("t")
     SnapshotTable.writeTransformPartitioned(spark, hr, mkDf(Seq(
       (1L, "2024-03-01 07:59:59", 1L),
       (2L, "2024-03-01 08:00:00", 2L))), "ts", "hour")
@@ -89,7 +86,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     assert(ids(dfh) == Set(2L) && kepth == 1,
       "the 08h bucket alone survives an 08h-range query")
 
-    val yr = tempTable()
+    val yr = tempDir("t")
     SnapshotTable.writeTransformPartitioned(spark, yr, mkDf(Seq(
       (1L, "2023-12-31 23:59:59", 1L),
       (2L, "2024-01-01 00:00:00", 2L))), "ts", "year")
@@ -98,10 +95,10 @@ class HiddenPartitioningSpec extends SparkSpec {
     assert(ids(dfy) == Set(2L) && kepty == 1)
 
     intercept[RuntimeException] {
-      SnapshotTable.writeTransformPartitioned(spark, tempTable(),
+      SnapshotTable.writeTransformPartitioned(spark, tempDir("t"),
         mkDf(Seq((1L, "2024-01-01 00:00:00", 1L))), "ts", "week")
     }
-    val plain = tempTable()
+    val plain = tempDir("t")
     SnapshotTable.write(spark, plain,
       mkDf(Seq((1L, "2024-01-01 00:00:00", 1L)))
         .withColumn("p", lit(0L)), "p")
@@ -113,7 +110,7 @@ class HiddenPartitioningSpec extends SparkSpec {
 
   test("the transform survives unrelated commits and constraints " +
       "compose with hidden partitioning") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeTransformPartitioned(spark, dir, mkDf(Seq(
       (1L, "2024-01-01 00:00:00", 10L),
       (2L, "2024-01-02 00:00:00", 20L))), "ts", "day")
@@ -133,7 +130,7 @@ class HiddenPartitioningSpec extends SparkSpec {
   test("null source values are refused in-pass (nothing commits); a " +
       "pre-guard default partition scans conservatively instead of " +
       "poisoning every range read") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // a single null ts anywhere in the batch fails the whole write
     // loudly BEFORE any commit (ADVICE r14: it would land in
     // __HIVE_DEFAULT_PARTITION__, whose dir name no transform
@@ -163,7 +160,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     // a raw write through the same metadata, the legacy-writer stand-in)
     // must not make readSourceRange throw forever — it scans
     // conservatively and the exact residual does the rest
-    val legacy = tempTable()
+    val legacy = tempDir("t")
     val rows = mkDf(Seq((1L, "2024-01-01 06:00:00", 10L),
       (2L, "2024-01-02 06:00:00", 20L)))
     val withBucket = rows.withColumn(SnapshotTable.HiddenPartCol,
@@ -186,7 +183,7 @@ class HiddenPartitioningSpec extends SparkSpec {
 
   test("partition evolution: day → month is metadata-only, mixed eras " +
       "prune under their OWN transform, DVs and idempotency compose") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeTransformPartitioned(spark, dir, mkDf(Seq(
       (1L, "2024-01-01 06:00:00", 10L),
       (2L, "2024-01-02 06:00:00", 20L),
@@ -233,7 +230,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     intercept[RuntimeException] {
       SnapshotTable.evolveTransform(spark, dir, "fortnight")
     }
-    val plain = tempTable()
+    val plain = tempDir("t")
     SnapshotTable.write(spark, plain,
       mkDf(Seq((1L, "2024-01-01 00:00:00", 1L))).withColumn("p", lit(0L)), "p")
     intercept[RuntimeException] {

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class IngestStatsSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapist").toString + "/t"
-
   private def mkDf(ks: Seq[Long]) = {
     import spark.implicits._
     ks.map(k => (k, (k * 37) % 1000, k % 2, s"r$k")).toDF("a", "b", "p", "v")
@@ -26,7 +23,7 @@ class IngestStatsSpec extends SparkSpec {
   test("append, appendBatch, merge, updateWhere, deleteWhere, and all " +
       "OPTIMIZE classes cover their new files; pre-registration files " +
       "stay uncovered until ANALYZE; clearing stops coverage") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 100L), "p") // v1: none
     val pre = files(dir)
     SnapshotTable.setStatsColumns(spark, dir, Seq("a", "b")) // v2
@@ -92,7 +89,7 @@ class IngestStatsSpec extends SparkSpec {
       "(schema evolution), and skipping prunes on range-correlated " +
       "ingest without any OPTIMIZE") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       (0L until 100L).map(k => (k, k % 2)).toDF("a", "p"), "p") // v1
     SnapshotTable.setStatsColumns(spark, dir, Seq("a", "later")) // v2
@@ -122,7 +119,7 @@ class IngestStatsSpec extends SparkSpec {
 
   test("validation: '|' and ',' in names are refused; registration is " +
       "idempotent") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 10L), "p")
     intercept[IllegalArgumentException] {
       SnapshotTable.setStatsColumns(spark, dir, Seq("a|b"))

@@ -28,8 +28,7 @@ class LakehouseModelSpec extends SparkSpec {
 
   private def runScenario(seed: Long, nOps: Int): Unit = {
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory(s"snapmodel$seed")
-      .toString + "/t"
+    val dir = tempDir("t")
     // model: key -> (partition, value); the table mirrors it exactly
     var model = Map.empty[Long, (Long, Long)]
     var nextKey = 0L

@@ -33,7 +33,7 @@ class LayoutsSpec extends SparkSpec {
   }
 
   test("z-ordered layout prunes partitions for a 2-D rectangle and stays exact") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString + "/events_z"
+    val dir = tempDir("events_z")
     val ev = Tables.events(spark, sf).select("event_id", "user_id", "value", "event_type")
     val meta = Layouts.writeZOrdered(ev, dir, "user_id", "event_id", bitsPerDim = 3)
     // a ~1/8 × 1/8 rectangle in (user_id, event_id)
@@ -87,7 +87,7 @@ class LayoutsSpec extends SparkSpec {
 
   test("deleteWhere rewrites only affected partitions; untouched files identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("delete").toString + "/t"
+    val dir = tempDir("t")
     // partition A holds users 1+2, B holds ONLY user 1, C holds user 3
     Seq((1L, "A", 1L), (2L, "A", 2L), (3L, "B", 1L), (4L, "B", 1L), (5L, "C", 3L))
       .toDF("id", "p", "user_id")
@@ -111,7 +111,7 @@ class LayoutsSpec extends SparkSpec {
   }
 
   test("compaction collapses a many-small-files directory preserving rows") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("t")
     val df = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     df.repartition(50).write.mode("overwrite").parquet(dir)
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -130,7 +130,7 @@ class LayoutsSpec extends SparkSpec {
   }
 
   test("compaction rolls FORWARD a committed interrupted hand-over") {
-    val dir = java.nio.file.Files.createTempDirectory("compact2").toString + "/t"
+    val dir = tempDir("t")
     val df = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     df.repartition(4).write.mode("overwrite").parquet(dir)
     val files = new java.io.File(dir).listFiles()
@@ -157,7 +157,7 @@ class LayoutsSpec extends SparkSpec {
   }
 
   test("compaction clears an orphaned commit marker instead of rolling it forward") {
-    val dir = java.nio.file.Files.createTempDirectory("compact4").toString + "/t"
+    val dir = tempDir("t")
     val df = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     df.repartition(4).write.mode("overwrite").parquet(dir)
     val total = df.count()
@@ -178,7 +178,7 @@ class LayoutsSpec extends SparkSpec {
   }
 
   test("compaction rolls BACK an uncommitted hand-over (the r3 data-loss window)") {
-    val dir = java.nio.file.Files.createTempDirectory("compact3").toString + "/t"
+    val dir = tempDir("t")
     val df = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     df.repartition(4).write.mode("overwrite").parquet(dir)
     val files = new java.io.File(dir).listFiles()

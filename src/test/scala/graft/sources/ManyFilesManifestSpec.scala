@@ -17,9 +17,6 @@ import graft.SparkSpec
   */
 class ManyFilesManifestSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapmany").toString + "/t"
-
   private def manifestLen(dir: String, v: Long): Long =
     java.nio.file.Files.size(
       java.nio.file.Paths.get(dir, "_manifests", s"v$v.manifest"))
@@ -39,9 +36,9 @@ class ManyFilesManifestSpec extends SparkSpec {
 
   test("commit cost is flat in file count: delta manifests at 2*10^4 " +
       "files, checkpoints on cadence, exact reconstruction cold") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val base = (1 to 20000).map(i => f"p=0/snap-syn-$i%05d.parquet")
-    assert(SnapshotTable.commitAt(spark, dir, 0L, base, Map.empty))
+    assert(SnapshotTable.commitAt(spark, dir, 0L, Manifest.Snapshot(base), Map.empty))
     // v1 is the create — necessarily full (file-count-sized)
     assert(manifestLen(dir, 1L) > 400000L,
       s"v1 should be the full 20k-line manifest: ${manifestLen(dir, 1L)}")
@@ -50,7 +47,7 @@ class ManyFilesManifestSpec extends SparkSpec {
     var files = base
     (2 to 41).foreach { v =>
       files = files :+ f"p=0/snap-syn-app$v%03d.parquet"
-      assert(SnapshotTable.commitAt(spark, dir, v - 1L, files, Map.empty))
+      assert(SnapshotTable.commitAt(spark, dir, v - 1L, Manifest.Snapshot(files), Map.empty))
     }
     // the commit-cost pin: an append commit's manifest is DELTA-sized
     // (one + line + headers), not file-count-sized — flat in file count
@@ -82,7 +79,7 @@ class ManyFilesManifestSpec extends SparkSpec {
     SnapshotTable.latest(spark, dir) // warm the state memo
     files = files :+ "p=0/snap-syn-warm.parquet"
     val warmReads = readsFor {
-      assert(SnapshotTable.commitAt(spark, dir, 41L, files, Map.empty))
+      assert(SnapshotTable.commitAt(spark, dir, 41L, Manifest.Snapshot(files), Map.empty))
     }
     assert(warmReads <= 1L,
       s"a warm commit resolved $warmReads manifests — not O(1)")
@@ -90,13 +87,13 @@ class ManyFilesManifestSpec extends SparkSpec {
 
   test("rewrite-shaped commits (remove + add) delta-encode; reorders " +
       "fall back to a FULL manifest and reconstruct exactly") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val base = (1 to 10000).map(i => f"p=0/snap-syn-$i%05d.parquet")
-    assert(SnapshotTable.commitAt(spark, dir, 0L, base, Map.empty))
+    assert(SnapshotTable.commitAt(spark, dir, 0L, Manifest.Snapshot(base), Map.empty))
     // compaction shape: drop 100 carried files, append 2 — delta-sized
     val kept = base.filterNot(_.contains("-000"))
     val v2 = kept ++ Seq("p=0/snap-syn-cmp1.parquet", "p=0/snap-syn-cmp2.parquet")
-    assert(SnapshotTable.commitAt(spark, dir, 1L, v2, Map.empty))
+    assert(SnapshotTable.commitAt(spark, dir, 1L, Manifest.Snapshot(v2), Map.empty))
     assert(manifestLen(dir, 2L) < 8192L,
       s"remove+add commit should be delta-sized: ${manifestLen(dir, 2L)}")
     SnapshotTable.clearMetadataCaches()
@@ -104,7 +101,7 @@ class ManyFilesManifestSpec extends SparkSpec {
     // restore shape: a REORDERED list is not (carry.filterNot ++ append)
     // — the writer must fall back to a full manifest, never a wrong delta
     val v3 = v2.reverse
-    assert(SnapshotTable.commitAt(spark, dir, 2L, v3, Map.empty))
+    assert(SnapshotTable.commitAt(spark, dir, 2L, Manifest.Snapshot(v3), Map.empty))
     assert(!manifestText(dir, 3L).exists(_.startsWith("#base=")),
       "a reordered list must publish a FULL manifest")
     SnapshotTable.clearMetadataCaches()
@@ -114,13 +111,13 @@ class ManyFilesManifestSpec extends SparkSpec {
 
   test("vacuum materializes a checkpoint at its kept floor before " +
       "reclaiming the delta chain underneath it") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val base = (1 to 5000).map(i => f"p=0/snap-syn-$i%05d.parquet")
-    assert(SnapshotTable.commitAt(spark, dir, 0L, base, Map.empty))
+    assert(SnapshotTable.commitAt(spark, dir, 0L, Manifest.Snapshot(base), Map.empty))
     var files = base
     (2 to 9).foreach { v => // all deltas, no cadence checkpoint yet
       files = files :+ f"p=0/snap-syn-app$v%03d.parquet"
-      assert(SnapshotTable.commitAt(spark, dir, v - 1L, files, Map.empty))
+      assert(SnapshotTable.commitAt(spark, dir, v - 1L, Manifest.Snapshot(files), Map.empty))
     }
     SnapshotTable.vacuum(spark, dir, retain = 2) // drops v1..v7
     assert(!java.nio.file.Files.exists(
@@ -139,7 +136,7 @@ class ManyFilesManifestSpec extends SparkSpec {
 
   test("metadata caches are bounded: forced eviction still reads " +
       "correctly (falls back to manifests/checkpoints/footers)") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     import spark.implicits._
     SnapshotTable.write(spark, dir,
       (1L to 40L).map(k => (k, k % 2)).toDF("k", "p"), "p")

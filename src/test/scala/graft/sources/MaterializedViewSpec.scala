@@ -12,9 +12,6 @@ import MaterializedView.AggSpec
   */
 class MaterializedViewSpec extends SparkSpec {
 
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"mv_$tag").toString + "/t"
-
   private def mkDf(rows: Seq[(String, Long, Double)]) = {
     import spark.implicits._
     rows.toDF("grp", "k", "v")

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class MergeMorSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapmor").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, Long, String)]) = {
     import spark.implicits._
     rows.toDF("k", "v", "p")
@@ -26,10 +23,10 @@ class MergeMorSpec extends SparkSpec {
       Seq((5L, 555L, "p2")) // duplicate key in the TARGET: must collapse
     val upserts = mkDf((0L until 20L).map(k => (k * 5, k * 5 + 9000L,
       s"p${(k * 5) % 3}"))) // 20 keys: 0,5,...,95 (some multi-match)
-    val cow = tempTable()
+    val cow = tempDir("t")
     SnapshotTable.write(spark, cow, mkDf(baseRows), "p")
     SnapshotTable.merge(spark, cow, "p", "k", upserts)
-    val mor = tempTable()
+    val mor = tempDir("t")
     SnapshotTable.write(spark, mor, mkDf(baseRows), "p")
     val filesBefore = SnapshotTable.latest(spark, mor).get._2.toSet
     val (v, matched, inserted) =
@@ -47,7 +44,7 @@ class MergeMorSpec extends SparkSpec {
 
   test("duplicate update keys refused wholesale; empty table " +
       "degenerates to create; constraints gate the batch") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     intercept[IllegalArgumentException] {
       SnapshotTable.mergeDV(spark, dir, "p", "k",
         mkDf(Seq((1L, 1L, "a"), (1L, 2L, "a"))))
@@ -67,7 +64,7 @@ class MergeMorSpec extends SparkSpec {
 
   test("a cross-partition key move lands in the new partition dir and " +
       "the old version stays suppressed through OPTIMIZE") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf((0L until 30L).map(k => (k, k, s"p${k % 2}"))), "p")
     // key 4 moves from p0 to pX with a new value

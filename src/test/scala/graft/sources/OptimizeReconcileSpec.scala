@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 class OptimizeReconcileSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapopt").toString + "/t"
-
   private def mkDf(ks: Seq[Long]) = {
     import spark.implicits._
     ks.map(k => (k, (k * 2654435761L) % 1000L, k % 2, k * 7L))
@@ -33,7 +30,7 @@ class OptimizeReconcileSpec extends SparkSpec {
 
   test("a CAS lost to a pure append commit-reconciles: one derivation, " +
       "the staged rewrite plus the winner's rows all land, DVs fold") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 400L), "p")      // v1
     SnapshotTable.deleteWhereDV(spark, dir, col("k") % 10 === 0)   // v2
     val d0 = SnapshotTable.optimizeDeriveCount.get()
@@ -68,7 +65,7 @@ class OptimizeReconcileSpec extends SparkSpec {
 
   test("a conflicting interleave (DV delete over rewritten rows) forces " +
       "a re-derive; the result is still exact") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 300L), "p") // v1
     val d0 = SnapshotTable.optimizeDeriveCount.get()
     val v = SnapshotTable.compactClusteredHooked(spark, dir, "p", "k",
@@ -84,7 +81,7 @@ class OptimizeReconcileSpec extends SparkSpec {
 
   test("a racing RESTORE (files leave the manifest) forces a re-derive " +
       "for the z-order class too") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 200L), "p")       // v1
     SnapshotTable.append(spark, dir, mkDf(200L until 260L), "p")    // v2
     val d0 = SnapshotTable.optimizeDeriveCount.get()
@@ -101,7 +98,7 @@ class OptimizeReconcileSpec extends SparkSpec {
   test("scoped OPTIMIZE (WHERE): out-of-scope files byte-identical in " +
       "the manifest, in-scope pruning holds, out-of-scope DV rows keep " +
       "applying, the feed stays silent") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // three appends fragment both partitions
     SnapshotTable.write(spark, dir, mkDf(0L until 100L), "p")       // v1
     SnapshotTable.append(spark, dir, mkDf(100L until 200L), "p")    // v2
@@ -138,7 +135,7 @@ class OptimizeReconcileSpec extends SparkSpec {
 
   test("real-thread race: a steady append stream racing BOTH OPTIMIZE " +
       "classes — every appended and every clustered row lands") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 200L), "p")
     val gate = new java.util.concurrent.CountDownLatch(1)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class ReplicaSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snaprep").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, Long, Long)]) = {
     import spark.implicits._
     rows.toDF("k", "p", "v")
@@ -28,7 +25,7 @@ class ReplicaSpec extends SparkSpec {
 
   test("replicate tracks every mutation verb incrementally and " +
       "idempotently") {
-    val src = tempTable(); val dst = tempTable()
+    val src = tempDir("t"); val dst = tempDir("t")
     SnapshotTable.write(spark, src,
       mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L))), "p")
     SnapshotTable.replicate(spark, src, dst, "p", "k")
@@ -57,7 +54,7 @@ class ReplicaSpec extends SparkSpec {
   }
 
   test("crash-window replay: re-running after a partial apply converges") {
-    val src = tempTable(); val dst = tempTable()
+    val src = tempDir("t"); val dst = tempDir("t")
     SnapshotTable.write(spark, src,
       mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     SnapshotTable.replicate(spark, src, dst, "p", "k")
@@ -76,7 +73,7 @@ class ReplicaSpec extends SparkSpec {
 
   test("a source vacuumed past the marker refuses loudly with the " +
       "remedy named; reseed=true re-copies and incremental resumes") {
-    val src = tempTable(); val dst = tempTable()
+    val src = tempDir("t"); val dst = tempDir("t")
     SnapshotTable.write(spark, src,
       mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     SnapshotTable.replicate(spark, src, dst, "p", "k") // marker 1
@@ -105,7 +102,7 @@ class ReplicaSpec extends SparkSpec {
   test("a maintenance-only source window advances the marker with a " +
       "metadata-only commit — vacuum can never strand a replica whose " +
       "source only ever OPTIMIZEd (ADVICE r15)") {
-    val src = tempTable(); val dst = tempTable()
+    val src = tempDir("t"); val dst = tempDir("t")
     SnapshotTable.write(spark, src,
       mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     SnapshotTable.replicate(spark, src, dst, "p", "k") // marker 1
@@ -133,7 +130,7 @@ class ReplicaSpec extends SparkSpec {
 
   test("MERGE refuses a duplicate-key batch wholesale — CDC replay can " +
       "never silently diverge on an ambiguous upsert") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L))), "p")
     val v0 = SnapshotTable.latest(spark, dir).get._1
     // the same key twice in one batch: which row should win is
@@ -156,7 +153,7 @@ class ReplicaSpec extends SparkSpec {
 
   test("a non-replica destination is refused; deleteMatchingDV is " +
       "join-based and no-ops on absent keys") {
-    val src = tempTable(); val dst = tempTable()
+    val src = tempDir("t"); val dst = tempDir("t")
     SnapshotTable.write(spark, src, mkDf(Seq((1L, 0L, 10L))), "p")
     SnapshotTable.write(spark, dst, mkDf(Seq((9L, 0L, 90L))), "p")
     intercept[RuntimeException] {

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class RestoreSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snaprst").toString + "/t"
-
   private def mkDf(ks: Seq[Long]) = {
     import spark.implicits._
     ks.map(k => (k, k % 2, s"r$k")).toDF("k", "p", "v")
@@ -24,7 +21,7 @@ class RestoreSpec extends SparkSpec {
   test("restore returns the exact target relation, keeps history " +
       "readable, is a no-op at current, and the feed converges via " +
       "resurrection inserts") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 100L), "p") // v1
     SnapshotTable.append(spark, dir, mkDf(100L until 200L), "p") // v2
     val (_, nDel) = SnapshotTable.deleteWhereDV(spark, dir,
@@ -62,7 +59,7 @@ class RestoreSpec extends SparkSpec {
 
   test("exactly-once replay markers keep their current values: a " +
       "restored table does not re-apply an already-committed batch") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 50L), "p") // v1
     val vB = SnapshotTable.appendBatch(spark, dir, mkDf(50L until 80L),
       "p", batchId = 7L, queryId = "s") // v2
@@ -82,7 +79,7 @@ class RestoreSpec extends SparkSpec {
 
   test("restoreAsOf resolves a timestamp to the highest committed " +
       "version at or before it, with restore's exact semantics") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 50L), "p") // v1
     SnapshotTable.append(spark, dir, mkDf(50L until 100L), "p") // v2
     val tsV2 = SnapshotTable.history(spark, dir)
@@ -100,7 +97,7 @@ class RestoreSpec extends SparkSpec {
 
   test("refusals: future target, vacuumed target, and a restored " +
       "relation violating a CURRENT constraint") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 10L) // k=0 violates later
       .withColumn("k", col("k") - 1), "p") // v1: has k = -1
     SnapshotTable.deleteWhere(spark, dir, "p", col("k") < 0L) // v2: clean
@@ -116,7 +113,7 @@ class RestoreSpec extends SparkSpec {
     // vacuumed target: retention guards lift for aged manifests only,
     // so force-apply by retaining just the latest and aging nothing —
     // vacuum(retain = 1) drops the v1/v2 manifests themselves
-    val dir2 = tempTable()
+    val dir2 = tempDir("t")
     SnapshotTable.write(spark, dir2, mkDf(0L until 10L), "p") // v1
     SnapshotTable.append(spark, dir2, mkDf(10L until 20L), "p") // v2
     SnapshotTable.append(spark, dir2, mkDf(20L until 30L), "p") // v3

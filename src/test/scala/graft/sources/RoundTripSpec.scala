@@ -14,24 +14,21 @@ class RoundTripSpec extends SparkSpec {
     .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
       "l_returnflag", "l_shipdate")
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString + "/data"
-
   test("json round-trip preserves rows (timestamps via ISO strings)") {
-    val path = tmp("json_rt")
+    val path = tempDir("data")
     sample.write.mode("overwrite").json(path)
     val back = spark.read.schema(sample.schema).json(path)
     assertSameRows(sample, back)
   }
 
   test("orc round-trip preserves rows") {
-    val path = tmp("orc_rt")
+    val path = tempDir("data")
     sample.write.mode("overwrite").orc(path)
     assertSameRows(sample, spark.read.orc(path))
   }
 
   test("csv round-trip with explicit schema preserves rows") {
-    val path = tmp("csv_rt")
+    val path = tempDir("data")
     sample.write.mode("overwrite").option("header", "true")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS").csv(path)
     val back = spark.read.option("header", "true").schema(sample.schema)
@@ -41,7 +38,7 @@ class RoundTripSpec extends SparkSpec {
 
   test("parquet codecs (snappy, zstd, gzip) all round-trip") {
     for (codec <- Seq("snappy", "zstd", "gzip")) {
-      val path = tmp(s"parquet_$codec")
+      val path = tempDir("data")
       sample.write.mode("overwrite").option("compression", codec).parquet(path)
       assertSameRows(sample, spark.read.parquet(path))
     }
@@ -49,7 +46,7 @@ class RoundTripSpec extends SparkSpec {
 
   test("schema evolution: mergeSchema reads old and new file generations together") {
     import org.apache.spark.sql.functions._
-    val path = tmp("parquet_evolve")
+    val path = tempDir("data")
     // generation 1: (l_orderkey, l_quantity); generation 2 adds a column
     val v1 = sample.select("l_orderkey", "l_quantity")
     v1.write.mode("overwrite").parquet(path)

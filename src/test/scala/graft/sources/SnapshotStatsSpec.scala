@@ -12,16 +12,13 @@ import org.apache.spark.sql.functions._
   */
 class SnapshotStatsSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapstats").toString + "/t"
-
   private def mkDf(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, (i % 3).toLong, i * 10L)).toDF("k", "p", "v")
   }
 
   test("writeClustered commits stats for every data file") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(400), "p", "k", rangeParts = 8)
     val files = SnapshotTable.latest(spark, dir).get._2
     val stats = SnapshotTable.fileStats(spark, dir, "k")
@@ -32,7 +29,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("readRange equals the full-scan filter on every probe range") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(500), "p", "k", rangeParts = 8)
     val total = SnapshotTable.latest(spark, dir).get._2.size
     for ((lo, hi) <- Seq((1L, 500L), (100L, 160L), (499L, 700L), (250L, 250L))) {
@@ -46,7 +43,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("slice count derives from the corpus under the target-rows knob") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     spark.conf.set("spark.graft.cluster.targetSliceRows", "50")
     try SnapshotTable.writeClustered(spark, dir, mkDf(1000), "p", "k")
     finally spark.conf.unset("spark.graft.cluster.targetSliceRows")
@@ -62,7 +59,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("plan pin: a pruned read's scan touches ONLY the live files") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(400), "p", "k", rangeParts = 8)
     val (df, kept, tot) = SnapshotTable.readRange(spark, dir, "k", 100L, 150L)
     assert(kept < tot)
@@ -73,7 +70,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("out-of-domain range prunes to zero files and zero rows") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(100), "p", "k", rangeParts = 4)
     val (df, kept, _) = SnapshotTable.readRange(spark, dir, "k", 1000L, 2000L)
     assert(kept == 0 && df.count() == 0L)
@@ -81,7 +78,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("a plain append's files have no stats and are always scanned") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(100), "p", "k", rangeParts = 4)
     import spark.implicits._
     SnapshotTable.append(spark, dir,
@@ -102,7 +99,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("deleteWhere drops rewritten partitions' stats, keeps the rest") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(300), "p", "k", rangeParts = 4)
     val before = SnapshotTable.fileStats(spark, dir, "k")
     SnapshotTable.deleteWhere(spark, dir, "p", col("p") === 0L && col("k") <= 3L)
@@ -120,7 +117,7 @@ class SnapshotStatsSpec extends SparkSpec {
   }
 
   test("deletion vectors apply through a pruned range read") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.writeClustered(spark, dir, mkDf(400), "p", "k", rangeParts = 8)
     SnapshotTable.deleteWhereDV(spark, dir, col("k") % 10 === 0)
     val (df, kept, tot) = SnapshotTable.readRange(spark, dir, "k", 95L, 130L)
@@ -132,7 +129,7 @@ class SnapshotStatsSpec extends SparkSpec {
   test("an all-null stats column neither crashes the stats pass nor " +
       "breaks the read (ADVICE r13: the NPE on Row.getLong(null))") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     val df = (1 to 50)
       .map(i => (i.toLong, (i % 2).toLong, Option.empty[Long]))
       .toDF("k", "p", "nv")
@@ -149,7 +146,7 @@ class SnapshotStatsSpec extends SparkSpec {
   test("a stats column whose NAME carries the '|' delimiter is rejected " +
       "at write time; a partition VALUE carrying it round-trips") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     intercept[IllegalArgumentException] {
       SnapshotTable.writeClustered(spark, dir,
         Seq((1L, 0L)).toDF("a|b", "p"), "p", "a|b")
@@ -169,7 +166,7 @@ class SnapshotStatsSpec extends SparkSpec {
   test("URI-hostile partition values (space, '%', '#', '+'): DV deletes " +
       "apply, stats address files, compact folds without resurrection") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     val vals = Seq("a b", "a%b", "a#b", "a+b")
     val df = (1 to 80).map(i => (i.toLong, vals(i % 4))).toDF("k", "p")
     SnapshotTable.writeClustered(spark, dir, df, "p", "k", rangeParts = 2)

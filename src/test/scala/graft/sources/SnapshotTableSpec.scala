@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class SnapshotTableSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snaptab").toString + "/t"
-
   private def rows(dir: String, version: Option[Long] = None): Set[(Long, Long)] =
     SnapshotTable.read(spark, dir, version)
       .select(col("k").cast("long"), col("p").cast("long"))
@@ -24,7 +21,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("timestamp travel: readAsOf resolves each commit stamp to its snapshot") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L))), "p")
     Thread.sleep(5) // distinct commit millis
     SnapshotTable.append(spark, dir, mkDf(Seq((2L, 0L))), "p")
@@ -49,7 +46,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("readAppendsSince: exactly the appended rows; None when unchanged") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 1L))), "p")
     val v1 = SnapshotTable.history(spark, dir).head._1
     SnapshotTable.append(spark, dir, mkDf(Seq((3L, 0L), (4L, 2L))), "p")
@@ -75,7 +72,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("publishIfAbsent is a CAS on the local filesystem: second publisher loses, winner's bytes survive") {
     import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("snapcas").toString
+    val base = tempDir()
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def mkTmp(name: String, content: String): Path = {
@@ -101,7 +98,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("deleteWhere commits atomically: every racing read is exactly old or new") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val all = (1L to 400L).map(k => (k, k % 4))
     SnapshotTable.write(spark, dir, mkDf(all), "p")
     val oldSnap = all.toSet
@@ -127,7 +124,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("old snapshot stays byte-stable until vacuum; vacuum reclaims it") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val all = (1L to 100L).map(k => (k, k % 2))
     SnapshotTable.write(spark, dir, mkDf(all), "p")
     SnapshotTable.deleteWhere(spark, dir, "p", col("k") <= 50)
@@ -141,7 +138,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("a full-partition delete drops the partition from the snapshot") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 0L), (3L, 1L))), "p")
     val (_, affected) = SnapshotTable.deleteWhere(spark, dir, "p", col("p") === 0)
     assert(affected == Seq("0"))
@@ -150,7 +147,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("orphaned stage files: invisible to readers, PROTECTED by the " +
       "retention window while fresh, reclaimed once aged") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 1L))), "p")
     // simulate a writer that staged a data file but died before commit
     mkDf(Seq((99L, 0L))).where(col("p") === 0).drop("p")
@@ -178,7 +175,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("appends are snapshots too and versions are monotone") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     assert(SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L))), "p") == 1L)
     assert(SnapshotTable.append(spark, dir, mkDf(Seq((2L, 1L))), "p") == 2L)
     assert(SnapshotTable.append(spark, dir, mkDf(Seq((3L, 0L))), "p") == 3L)
@@ -200,7 +197,7 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.latest(spark, dir).get._2
 
   test("merge replaces matched rows, inserts the rest, and leaves untouched partitions' files alone") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf3(Seq((1L, 0L, "a"), (2L, 0L, "b"), (3L, 1L, "c"), (4L, 2L, "d"))), "p")
     val before = manifestFiles(dir)
@@ -221,7 +218,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("merge rejects duplicate update keys; empty table degenerates to create") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     intercept[IllegalArgumentException] {
       SnapshotTable.merge(spark, dir, "p", "k",
         mkDf3(Seq((1L, 0L, "a"), (1L, 0L, "b"))))
@@ -239,7 +236,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("appendBatch is idempotent on batch id (exactly-once replay contract)") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val v0 = SnapshotTable.appendBatch(spark, dir, mkDf(Seq((1L, 0L))), "p", 0L)
     val v1 = SnapshotTable.appendBatch(spark, dir, mkDf(Seq((2L, 1L))), "p", 1L)
     // driver died post-commit, engine replays batch 1: no-op, same version
@@ -257,7 +254,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("schema evolution: appending a new column surfaces nulls on old files") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 1L))), "p")
     // the v2 batch carries an extra column; v1's files never get rewritten
     SnapshotTable.append(spark, dir,
@@ -272,7 +269,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("compact coalesces crowded partitions into one file, rows identical") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 1L))), "p")
     (3L to 8L).foreach(k =>
       SnapshotTable.append(spark, dir, mkDf(Seq((k, k % 2))), "p"))

@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   */
 class StreamingReplaySpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapreplay").toString + "/t"
-
   private def mkDf(pairs: Seq[(Long, Long)]) = {
     import spark.implicits._
     pairs.toDF("k", "p")
@@ -39,7 +36,7 @@ class StreamingReplaySpec extends SparkSpec {
 
   test("appendBatch commit cost is O(1) manifests regardless of history " +
       "depth, and replays at every depth return the original version") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     val versions = (0 until 60).map { b =>
       b.toLong -> SnapshotTable.appendBatch(spark, dir,
         mkDf(Seq((b.toLong, b % 2L))), "p", b.toLong, "qA")
@@ -93,7 +90,7 @@ class StreamingReplaySpec extends SparkSpec {
 
   test("the replay header survives interleaved non-batch commits, full " +
       "replaces, and distinct query ids stay independent") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.appendBatch(spark, dir, mkDf(Seq((1L, 0L))), "p", 0L, "qA")
     SnapshotTable.appendBatch(spark, dir, mkDf(Seq((2L, 1L))), "p", 0L, "qB")
     // non-batch commits in between must CARRY both markers forward
@@ -116,7 +113,7 @@ class StreamingReplaySpec extends SparkSpec {
   }
 
   test("mergeBatch: concurrent replays of the same batch commit exactly once") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L), (2L, 1L))), "p")
     val updates = mkDf(Seq((2L, 0L), (3L, 1L)))
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -145,7 +142,7 @@ class StreamingReplaySpec extends SparkSpec {
   }
 
   test("a stale CAS loser cannot publish into a vacuum-opened version hole") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     (1 to 5).foreach(i => SnapshotTable.append(spark, dir,
       mkDf(Seq((i.toLong, 0L))), "p"))
     assert(SnapshotTable.latest(spark, dir).get._1 == 5L)
@@ -156,7 +153,7 @@ class StreamingReplaySpec extends SparkSpec {
     // The watermark (published before the manifests were deleted) must
     // make the publish retract itself.
     val ok = SnapshotTable.commitAt(spark, dir, 2L,
-      Seq("p=0/ghost.parquet"), Map.empty)
+      Manifest.Snapshot(Seq("p=0/ghost.parquet")), Map.empty)
     assert(!ok, "a commit below the vacuum watermark must be refused")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -167,7 +164,7 @@ class StreamingReplaySpec extends SparkSpec {
   }
 
   test("vacuum racing live appends never loses a committed row") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((0L, 0L))), "p")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

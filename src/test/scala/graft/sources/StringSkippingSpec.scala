@@ -13,13 +13,10 @@ import org.apache.spark.sql.functions._
   */
 class StringSkippingSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapsst").toString + "/t"
-
   test("range and prefix reads prune per-chunk on ordered string ingest " +
       "and stay exact; stat-less files scan conservatively") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     def chunk(lo: Int, hi: Int) = (lo until hi)
       .map(k => (f"2024-${k / 28 + 1}%02d-${k % 28 + 1}%02d", k.toLong, k % 2))
       .toDF("day", "v", "p")
@@ -50,7 +47,7 @@ class StringSkippingSpec extends SparkSpec {
   test("hostile values round-trip: '|', newline, '%', and unicode in " +
       "stats never corrupt the manifest or mis-prune") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     val vals = Seq("a|b", "a\nb", "100%", "zz~", "épée", "早晨", "  lead")
     SnapshotTable.write(spark, dir,
       vals.zipWithIndex.map { case (s, i) => (s, i.toLong, 0) }
@@ -78,7 +75,7 @@ class StringSkippingSpec extends SparkSpec {
       "never wrongly excluded by a prefix read, and pruning bounds use " +
       "Spark's UTF-8 order") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     // "p𐀀" (U+10000) is ABOVE "p￿" in UTF-8 byte order
     // but BELOW it in Java's UTF-16 code-unit order — the classic
     // disagreement; a between(prefix, prefix + "￿")-style scheme
@@ -101,7 +98,7 @@ class StringSkippingSpec extends SparkSpec {
       "stay deleted in pruned reads; compact keeps registered string " +
       "coverage") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     def chunk(lo: Int, hi: Int) = (lo until hi)
       .map(k => (f"d$k%04d", k.toLong, k % 2)).toDF("k", "v", "p")
     SnapshotTable.write(spark, dir, chunk(0, 100), "p") // v1

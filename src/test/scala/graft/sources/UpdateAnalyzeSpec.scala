@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class UpdateAnalyzeSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapupd").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, Long, Long)]) = {
     import spark.implicits._
     rows.toDF("k", "p", "v")
@@ -29,7 +26,7 @@ class UpdateAnalyzeSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("updateWhere rewrites no data file, stacks, and moves partitions") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir,
       mkDf(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 1L, 30L))), "p")
     val (_, files0, _) = SnapshotTable.latestFull(spark, dir).get
@@ -62,7 +59,7 @@ class UpdateAnalyzeSpec extends SparkSpec {
   }
 
   test("updateWhere: no-match commits nothing; bad assignments rejected") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L))), "p")
     val (v, n) = SnapshotTable.updateWhere(spark, dir, "p",
       col("k") > 100L, Map("v" -> lit(0L)))
@@ -78,7 +75,7 @@ class UpdateAnalyzeSpec extends SparkSpec {
   }
 
   test("updateWhere racing an append: both effects land") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     val gate = new java.util.concurrent.CountDownLatch(1)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -96,7 +93,7 @@ class UpdateAnalyzeSpec extends SparkSpec {
 
   test("analyzeStats backfills only missing files, is idempotent, and " +
       "enables pruning on an append-built table") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // three appends of DISJOINT key ranges — naturally skippable, but
     // stats-less until ANALYZE
     SnapshotTable.write(spark, dir,
@@ -128,7 +125,7 @@ class UpdateAnalyzeSpec extends SparkSpec {
 
   test("compactClustered: one commit rewrites the table range-clustered, " +
       "folds DVs, refreshes the full index, relation identical") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     // fragmented, interleaved appends: every file spans the key domain
     (0 until 4).foreach { i =>
       val chunk = mkDf((1L to 200L).collect {

@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class WapSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapwap").toString + "/t"
-
   private def mkDf(rows: Seq[(Long, Long, Long)]) = {
     import spark.implicits._
     rows.toDF("k", "p", "v")
@@ -31,7 +28,7 @@ class WapSpec extends SparkSpec {
 
   test("stage → audit → drop: staged rows visible only through the " +
       "branch, bytes deleted on drop") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L), (2L, 1L, 20L))), "p")
     def dataFiles(): Int = {
       val fs = new org.apache.hadoop.fs.Path(dir)
@@ -69,7 +66,7 @@ class WapSpec extends SparkSpec {
   test("publish: CAS append with exactly-once marker; constraints " +
       "enforce at publish; crash window between commit and manifest " +
       "sweep replays clean; published names are one-shot") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L))), "p")  // v1
     SnapshotTable.addConstraint(spark, dir, "v_pos", "v > 0")       // v2
     SnapshotTable.writeBranch(spark, dir,
@@ -112,7 +109,7 @@ class WapSpec extends SparkSpec {
 
   test("vacuum protects a staged branch's files for its whole " +
       "lifetime, not just the retention window") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(Seq((1L, 0L, 10L))), "p")
     SnapshotTable.writeBranch(spark, dir, mkDf(Seq((2L, 0L, 20L))), "p", "b1")
     SnapshotTable.append(spark, dir, mkDf(Seq((3L, 1L, 30L))), "p")

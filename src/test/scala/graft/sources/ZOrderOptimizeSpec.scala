@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class ZOrderOptimizeSpec extends SparkSpec {
 
-  private def tempTable(): String =
-    java.nio.file.Files.createTempDirectory("snapzord").toString + "/t"
-
   /** (a, b) grid with b pseudorandom w.r.t. a — 1-D clustering on `a`
     * leaves every slice spanning b's whole domain. */
   private def mkDf(ks: Seq[Long]) = {
@@ -24,7 +21,7 @@ class ZOrderOptimizeSpec extends SparkSpec {
 
   test("z-order prunes BOTH columns, keeps the relation row-identical, " +
       "folds DVs, and the change feed skips the commit") {
-    val dir = tempTable()
+    val dir = tempDir("t")
     SnapshotTable.write(spark, dir, mkDf(0L until 500L), "p")
     SnapshotTable.append(spark, dir, mkDf(500L until 1000L), "p")
     SnapshotTable.deleteWhereDV(spark, dir, col("a") % 17 === 0) // v3
@@ -63,7 +60,7 @@ class ZOrderOptimizeSpec extends SparkSpec {
   test("N-column z-order: three independent columns all prune, the " +
       "relation is identical, and the column budget is validated") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     // a, b, c pairwise pseudorandom: no 1-D or 2-D layout could serve
     // all three access paths
     val df = (0L until 4000L).map { k =>
@@ -95,7 +92,7 @@ class ZOrderOptimizeSpec extends SparkSpec {
   test("wide-span columns (random 64-bit ids) keep Morton alignment — " +
       "the divide-first cell scaling cannot overflow (ADVICE r15)") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     // values scattered over nearly the whole long domain: the old
     // ((v - lo) * cells) div span multiplied BEFORE dividing, so any
     // span past ~2^55 at 256 cells overflowed into negative/garbage
@@ -128,7 +125,7 @@ class ZOrderOptimizeSpec extends SparkSpec {
   test("null cells route to the null range-partition and stay exact; " +
       "an all-null column is refused; bad column names are refused") {
     import spark.implicits._
-    val dir = tempTable()
+    val dir = tempDir("t")
     val df = (0L until 100L).map(k =>
       (k, if (k % 10 == 0) None else Some((k * 7) % 100), k % 2))
       .toDF("a", "b", "p")
@@ -139,7 +136,7 @@ class ZOrderOptimizeSpec extends SparkSpec {
     // the rest exact
     val (got, _, _) = SnapshotTable.readRange(spark, dir, "b", 0L, 100L)
     assert(got.count() == 90L)
-    val nulls = tempTable()
+    val nulls = tempDir("t")
     SnapshotTable.write(spark, nulls,
       (0L until 10L).map(k => (k, Option.empty[Long], 0L)).toDF("a", "b", "p"),
       "p")

@@ -12,7 +12,7 @@ class EventStreamSpec extends SparkSpec {
   // the file stream source needs a directory; stage the single parquet
   // file into one (a real deployment streams a growing directory anyway)
   private lazy val eventsDir: String = {
-    val tmp = java.nio.file.Files.createTempDirectory("events_stream")
+    val tmp = java.nio.file.Paths.get(tempDir())
     EventStream.stageEvents(spark, sf, tmp, "part-0")
     tmp.toString
   }
@@ -67,7 +67,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch sink lands partitioned parquet that matches the memory sink") {
-    val outDir = java.nio.file.Files.createTempDirectory("fb_out").toString + "/agg"
+    val outDir = tempDir("agg")
     EventStream.runToParquet(
       EventStream.hourlyAggregates(EventStream.readEvents(spark, eventsDir)), outDir)
     val fromParquet = spark.read.parquet(outDir)
@@ -82,7 +82,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("snapshot-table sink is exactly-once across a full stream replay") {
-    val dir = java.nio.file.Files.createTempDirectory("snap_sink").toString + "/t"
+    val dir = tempDir("t")
     def runOnce(): Unit = EventStream.runToSnapshotTable(
       EventStream.hourlyAggregates(EventStream.readEvents(spark, eventsDir)),
       dir, "event_type")
@@ -108,10 +108,10 @@ class EventStreamSpec extends SparkSpec {
     // two staged files → two micro-batches → up to two sketch CELLS per
     // (day, type); merge-on-read must still answer rank-accurate
     // quantiles, and a full stream replay must not double-count
-    val srcDir = java.nio.file.Files.createTempDirectory("sketch_src")
+    val srcDir = java.nio.file.Paths.get(tempDir())
     EventStream.stageEvents(spark, sf, srcDir, "a")
     EventStream.stageEvents(spark, sf, srcDir, "b") // same corpus again
-    val dir = java.nio.file.Files.createTempDirectory("sketch_tab").toString + "/t"
+    val dir = tempDir("t")
     def runOnce(): Unit = EventStream.runSketchCells(
       EventStream.readEvents(spark, srcDir.toString), dir)
     runOnce()
@@ -142,9 +142,9 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("streaming distinct-cell table: theta merge-on-read equals exact distincts") {
-    val srcDir = java.nio.file.Files.createTempDirectory("theta_src")
+    val srcDir = java.nio.file.Paths.get(tempDir())
     EventStream.stageEvents(spark, sf, srcDir, "a")
-    val dir = java.nio.file.Files.createTempDirectory("theta_tab").toString + "/t"
+    val dir = tempDir("t")
     EventStream.runDistinctCells(
       EventStream.readEvents(spark, srcDir.toString), dir)
     val est = EventStream.distinctRollup(spark, dir).collect()
@@ -162,7 +162,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("streaming anomaly scorer agrees with batch q158 on closed windows") {
-    val baseDir = java.nio.file.Files.createTempDirectory("anom_base").toString + "/b"
+    val baseDir = tempDir("b")
     EventStream.buildSeasonalBaseline(spark, sf, baseDir)
     val streamed = EventStream.runToMemory(spark,
       EventStream.scoreAgainstBaseline(
@@ -189,7 +189,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("streaming dedup by event_id drops replayed events within the watermark") {
     // stage the same parquet file twice — a full replay of every event
-    val dir = java.nio.file.Files.createTempDirectory("events_dup")
+    val dir = java.nio.file.Paths.get(tempDir())
     EventStream.stageEvents(spark, sf, dir, "a")
     java.nio.file.Files.copy(dir.resolve("a.parquet"), dir.resolve("b.parquet"))
     val deduped = EventStream.runToMemory(spark,
@@ -230,7 +230,7 @@ class EventStreamSpec extends SparkSpec {
     // advancing both sides' watermarks so outer (null-click) rows for the
     // main data can actually emit — outer emission is watermark-gated and
     // needs a later batch
-    val dir = java.nio.file.Files.createTempDirectory("events_outer")
+    val dir = java.nio.file.Paths.get(tempDir())
     EventStream.stageEvents(spark, sf, dir, "a")
     val maxTs = graft.Tables.events(spark, sf).agg(max("ts")).first().getAs[Any](0)
     val maxMs = millis(maxTs)
@@ -431,7 +431,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("late events behind the watermark are dropped, and the drop is ledgered") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("events_late")
+    val dir = java.nio.file.Paths.get(tempDir())
     val t0 = java.time.LocalDateTime.parse("2024-06-01T00:10:00")
       .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
     var mtime = 0
